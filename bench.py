@@ -24,7 +24,9 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -146,21 +148,22 @@ def main() -> None:
     # documented untimed-warmup policy excludes. A 1-row AvailableNow
     # file-source stream with a no-op foreachBatch initializes that
     # machinery without touching any registry query.
-    import tempfile as _tempfile
-
-    _wdir = _tempfile.mkdtemp(prefix="bench_stream_warm_")
-    spark.range(1).write.parquet(os.path.join(_wdir, "src"))
-    (
-        spark.readStream.schema("id long")
-        .parquet(os.path.join(_wdir, "src"))
-        .writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(_wdir, "ckpt"))
-        .foreachBatch(
-            lambda df, _bid: df.write.format("noop").mode("overwrite").save()
+    _wdir = tempfile.mkdtemp(prefix="bench_stream_warm_")
+    try:
+        spark.range(1).write.parquet(os.path.join(_wdir, "src"))
+        (
+            spark.readStream.schema("id long")
+            .parquet(os.path.join(_wdir, "src"))
+            .writeStream.trigger(availableNow=True)
+            .option("checkpointLocation", os.path.join(_wdir, "ckpt"))
+            .foreachBatch(
+                lambda df, _bid: df.write.format("noop").mode("overwrite").save()
+            )
+            .start()
+            .awaitTermination()
         )
-        .start()
-        .awaitTermination()
-    )
+    finally:
+        shutil.rmtree(_wdir, ignore_errors=True)
 
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
     per_query: dict[str, float] = {}

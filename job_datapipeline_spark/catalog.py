@@ -1,8 +1,9 @@
 """Table catalog: load the testdata star schema, register temp views.
 
-Loads are plain ``spark.read.parquet`` scans — column pruning and filter
-pushdown then happen at the scan (Catalyst), which is the whole point: at
-100 TB a query that touches 2 columns must read 2 columns.
+Loads are plain ``spark.read.parquet`` scans with the declared schema —
+column pruning and filter pushdown then happen at the scan (Catalyst), which
+is the whole point: at 100 TB a query that touches 2 columns must read 2
+columns.
 """
 
 from __future__ import annotations
@@ -11,7 +12,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructType, TimestampNTZType
+from pyspark.sql.types import StructType
 
 from .schemas import TESTDATA_SCHEMAS
 
@@ -21,36 +22,28 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def _ensure_session_confs(spark: SparkSession) -> None:
-    """Runtime confs any session needs to read the testdata correctly —
-    set here (not only in the session factory) so externally-created
-    sessions, e.g. the driver's, behave identically.
-
-    - The events table stores TIMESTAMP(NANOS) which Spark's parquet reader
-      rejects; nanosAsLong reads it as int64 and ``table`` converts back.
-    - UTC session tz makes ltz<->ntz conversions the identity, so timestamp
-      values agree with engines that read parquet timestamps as naive.
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    """UTC session tz makes ltz<->ntz conversions the identity, so timestamp
+    values agree with engines that read parquet timestamps as naive. Set
+    here (not only in the session factory) so externally-created sessions,
+    e.g. the driver's, behave identically."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """One testdata table as a DataFrame (lazy parquet scan)."""
+    """One testdata table as a DataFrame (lazy parquet scan).
+
+    The scan is built from the declared ``TESTDATA_SCHEMAS[name]``, so no
+    job runs to infer a schema from the file footer. Every timestamp column
+    is stored as ``TIMESTAMP(MICROS, isAdjustedToUTC=false)`` and read as
+    the declared ``timestamp_ntz``; a file that drifts from its declaration
+    (for example a ``TIMESTAMP(NANOS)`` column) fails when the scan runs
+    instead of reading as longs. ``tests/test_catalog_schemas.py`` checks
+    every footer against its declaration."""
     if name not in TESTDATA_SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
     _ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    # Re-type nanos-as-long columns back to timestamp_ntz (integer division
-    # keeps full precision; a double divide would lose bits above 2^53).
-    declared = {f.name: f.dataType for f in TESTDATA_SCHEMAS[name].fields}
-    for f_actual in df.schema.fields:
-        want = declared.get(f_actual.name)
-        if isinstance(want, TimestampNTZType) and isinstance(f_actual.dataType, LongType):
-            micros = F.expr(f"`{f_actual.name}` div 1000")
-            df = df.withColumn(
-                f_actual.name, F.timestamp_micros(micros).cast("timestamp_ntz")
-            )
-    return df
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return spark.read.schema(TESTDATA_SCHEMAS[name]).parquet(path)
 
 
 def literal_dim(spark: SparkSession, rows, schema: str) -> DataFrame:

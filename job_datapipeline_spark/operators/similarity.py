@@ -256,27 +256,12 @@ def _write_cells(
     path: str,
     mode: str,
     partition_cols: tuple[str, ...] = ("cell",),
-    files_per_partition: int = 1,
-    split_col: str | None = None,
 ) -> None:
     """Cluster by the partition key(s), then ``partitionBy`` write (guide
     §6): each leaf directory is written by exactly one task — one file per
     partition value instead of (tasks x values) small files, so the probe
-    side lists/opens the minimum file count.
-
-    ``files_per_partition`` is the escape hatch for HOT cells: clustering
-    an entire cell through one task caps write parallelism at the distinct
-    cell count and puts a whole cell in one task's memory — fine here,
-    a straggler/OOM risk for a skewed 100 TB cell.  >1 adds a
-    deterministic ``pmod(xxhash64(split_col), n)`` sub-key to the
-    clustering (NOT to the directory layout), splitting each cell across
-    n writer tasks / n files (deterministic under retry — guide §2.5's
-    rand() warning)."""
-    if files_per_partition > 1 and split_col is not None:
-        sub = F.pmod(F.xxhash64(F.col(split_col)), F.lit(files_per_partition))
-        writer = cells.repartition(*[F.col(c) for c in partition_cols], sub)
-    else:
-        writer = cells.repartition(*partition_cols)
+    side lists/opens the minimum file count."""
+    writer = cells.repartition(*partition_cols)
     writer.write.mode(mode).partitionBy(*partition_cols).parquet(path)
 
 

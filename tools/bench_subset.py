@@ -14,7 +14,9 @@ import argparse
 import io
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 from contextlib import redirect_stdout
 
@@ -51,19 +53,20 @@ def main() -> None:
     REGISTRY["pricing_summary"].fn(spark, args.sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
-    import tempfile
-
     wdir = tempfile.mkdtemp(prefix="subset_stream_warm_")
-    spark.range(1).write.parquet(os.path.join(wdir, "src"))
-    (
-        spark.readStream.schema("id long")
-        .parquet(os.path.join(wdir, "src"))
-        .writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(wdir, "ckpt"))
-        .foreachBatch(lambda df, _bid: df.write.format("noop").mode("overwrite").save())
-        .start()
-        .awaitTermination()
-    )
+    try:
+        spark.range(1).write.parquet(os.path.join(wdir, "src"))
+        (
+            spark.readStream.schema("id long")
+            .parquet(os.path.join(wdir, "src"))
+            .writeStream.trigger(availableNow=True)
+            .option("checkpointLocation", os.path.join(wdir, "ckpt"))
+            .foreachBatch(lambda df, _bid: df.write.format("noop").mode("overwrite").save())
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        shutil.rmtree(wdir, ignore_errors=True)
 
     out: dict[str, float] = {}
     for name in args.names:
