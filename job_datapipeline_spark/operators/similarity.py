@@ -291,8 +291,11 @@ def ivf_index_write_frame(
     dynamic partition pruning on BOTH keys — the storage layout form of
     "filter inside the probed cells" (filtered vector search)."""
     cents.write.mode("overwrite").parquet(path + "/centroids")
-    persisted = corpus.sparkSession.read.parquet(path + "/centroids").select(
-        "cid", F.col("cent").alias("_cent")
+    # read back with the written schema: footer inference would start a job
+    persisted = (
+        corpus.sparkSession.read.schema(cents.schema)
+        .parquet(path + "/centroids")
+        .select("cid", F.col("cent").alias("_cent"))
     )
     assigned = ivf_assign(
         corpus.select(corpus_id, *meta_cols, F.col(vec_col).alias("_v")),
@@ -556,8 +559,11 @@ def ivf_pq_index_write_frame(
         lambda: cb.write.mode("overwrite").parquet(path + "/codebook"),
         lambda: cents.write.mode("overwrite").parquet(path + "/centroids"),
     )
-    persisted = spark.read.parquet(path + "/centroids").select(
-        "cid", F.col("cent").alias("_cent")
+    # read back with the written schemas: footer inference would start a job
+    persisted = (
+        spark.read.schema(cents.schema)
+        .parquet(path + "/centroids")
+        .select("cid", F.col("cent").alias("_cent"))
     )
     assigned = ivf_assign(
         corpus.select(corpus_id, F.col(vec_col).alias("_v")),
@@ -565,7 +571,7 @@ def ivf_pq_index_write_frame(
         corpus_id,
         1,
     ).localCheckpoint()
-    cbp = spark.read.parquet(path + "/codebook")
+    cbp = spark.read.schema(cb.schema).parquet(path + "/codebook")
     _run_concurrent(
         lambda: _write_cells(
             _cells_frame(assigned, corpus_id, vec_col), path + "/cells", "overwrite"
@@ -601,14 +607,16 @@ def ivf_pq_index_append(
     assign for the codes, recomputing the quantizer join per table — the
     checkpoint halves the per-arrival assignment cost and guarantees cells
     and codes are projections of the SAME assignment by construction).
-    The two appends are independent jobs and run overlapped (guide §2.6).
+
+    The two appends run one after another, cells first, so codes stay a
+    subset of cells whichever append fails: the probe ranks codes and
+    reranks from cells, and never meets a code without its vector.  A
+    failed codes append leaves the batch in cells without codes; the
+    repair path is to re-derive the missing codes from the cells table
+    (the codes are a pure projection of it).
 
     Cluster caveat: ``localCheckpoint`` is eager and lineage-free (an
-    executor loss mid-append fails the job; re-ingest the batch), and the
-    cells/codes appends are two non-atomic writes — a failure between
-    them leaves cells appended without codes; the repair path is to
-    re-derive the missing cell's codes from the cells table (the codes
-    are a pure projection of it)."""
+    executor loss mid-append fails the job; re-ingest the batch)."""
     cbp = spark.read.parquet(path + "/codebook")
     cents = spark.read.parquet(path + "/centroids").select(
         "cid", F.col("cent").alias("_cent")
@@ -619,17 +627,13 @@ def ivf_pq_index_append(
         corpus_id,
         1,
     ).localCheckpoint()
-    _run_concurrent(
-        lambda: _write_cells(
-            _cells_frame(assigned, corpus_id, vec_col), path + "/cells", "append"
+    _write_cells(_cells_frame(assigned, corpus_id, vec_col), path + "/cells", "append")
+    _write_cells(
+        pq_encode(assigned, cbp, corpus_id, m, sub, carry_cols=("cell",)).select(
+            "cell", corpus_id, "codes"
         ),
-        lambda: _write_cells(
-            pq_encode(assigned, cbp, corpus_id, m, sub, carry_cols=("cell",)).select(
-                "cell", corpus_id, "codes"
-            ),
-            path + "/codes",
-            "append",
-        ),
+        path + "/codes",
+        "append",
     )
 
 

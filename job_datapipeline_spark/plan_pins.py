@@ -51,6 +51,10 @@ BOUNDED_GLOBAL_WINDOWS: dict[str, str] = {
     "orders_seasonal_anomaly": "median/MAD windows over the day-calendar "
                                "residual frame",
     "orders_littles_law": "running WIP sweep over the day calendar",
+    "orders_survival_km": "total, risk set and survival fold over the "
+                          "53 week rows (52-week horizon + 1)",
+    "compaction_bin_packing": "capacity total over the priority x month "
+                              "calendar (5 priorities x <=100 months)",
 }
 
 KNOWN: dict[str, tuple[int | None, str]] = {

@@ -208,7 +208,12 @@ _KM_PACK = 1_000_000  # step encoding n*PACK + d; requires n, d < PACK
         "Truncation loses <1 micro per step, deterministically. The "
         "100 TB shape: one window over orders yields first/second "
         "dates, units partial-aggregate to the 53-row week frame, and "
-        "the fold runs on that frame alone; the n<1e6 packing ceiling "
+        "the rest is ONE linear plan over that frame with no "
+        "checkpoint: the total is an unpartitioned window sum over "
+        "the 53 rows, n_at_risk a running window sum, and each step's "
+        "survival an F.aggregate over a running-window collect_list "
+        "(ROWS UNBOUNDED PRECEDING, ordered by the unique week, so "
+        "every prefix is deterministic); the n<1e6 packing ceiling "
         "is per-COHORT at-risk count — shard the curve by cohort "
         "(signup month) long before 1e6, as every retention system "
         "does anyway.",
@@ -232,8 +237,6 @@ def orders_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("week"),
         is_event.alias("is_event"),
     )
-    # 53-row frame; checkpointed because totals AND the risk window AND
-    # the final join all consume it (orders is scanned exactly once)
     weekly = units.groupBy("week").agg(
         F.sum(F.when(F.col("is_event"), 1).otherwise(0))
         .cast("bigint")
@@ -241,61 +244,38 @@ def orders_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("is_event"), 0).otherwise(1))
         .cast("bigint")
         .alias("c"),
-    ).localCheckpoint()
-    total = weekly.agg(
-        F.sum(F.col("d") + F.col("c")).cast("bigint").alias("total")
     )
+    # The windows below see only the 53 week rows; week is unique, so each
+    # running collect_list prefix is in week order and deterministic.
+    exits = F.col("d") + F.col("c")
+    everything = Window.partitionBy()
     cum = Window.orderBy("week").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    risk = weekly.crossJoin(F.broadcast(total)).select(
+    risk = weekly.select(
         "week",
         "d",
         "c",
-        (
-            F.col("total")
-            - (F.sum(F.col("d") + F.col("c")).over(cum) - (F.col("d") + F.col("c")))
-        )
+        (F.sum(exits).over(everything) - (F.sum(exits).over(cum) - exits))
         .cast("bigint")
         .alias("n_at_risk"),
-    ).localCheckpoint()  # feeds the fold input AND the final join
-    packed = risk.agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("week"),
-                    (F.col("n_at_risk") * _KM_PACK + F.col("d")).alias("nd"),
-                )
-            )
-        ).alias("l")
-    )
-    expanded = packed.select(
-        "l", F.explode(F.sequence(F.lit(1), F.size("l"))).alias("t")
     )
     pack_lit = F.lit(_KM_PACK).cast("long")
     surv = F.aggregate(
-        F.transform(F.slice(F.col("l"), F.lit(1), F.col("t")), lambda s: s["nd"]),
+        F.collect_list(F.col("n_at_risk") * _KM_PACK + F.col("d")).over(cum),
         pack_lit,
         lambda acc, x: F.floor(
             (acc * (F.floor(x / pack_lit) - F.pmod(x, pack_lit)))
             / F.floor(x / pack_lit)
         ).cast("long"),
     )
-    curve = expanded.select(
-        F.element_at("l", F.col("t"))["week"].alias("week"),
+    return risk.select(
+        "week",
+        F.col("d").alias("n_events"),
+        F.col("c").alias("n_censored"),
+        "n_at_risk",
         surv.alias("surv_micro"),
-    )
-    return (
-        risk.join(curve, "week")
-        .select(
-            "week",
-            F.col("d").alias("n_events"),
-            F.col("c").alias("n_censored"),
-            "n_at_risk",
-            "surv_micro",
-        )
-        .orderBy("week")
-    )
+    ).orderBy("week")
 
 
 # ---------------------------------------------------------------------------

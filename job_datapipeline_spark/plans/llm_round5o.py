@@ -411,7 +411,12 @@ _PACK_CAP_X = 4  # capacity = 4x the average item size (scale-invariant)
         "the CALENDAR-bounded month list (<=100 elements — O(n^2) on "
         "a frame that never grows with data). The 100 TB shape: item "
         "stats partial-aggregate map-side to the partition x month "
-        "frame; the fold runs per partition on that tiny frame; the "
+        "frame, and the rest is ONE linear plan over that frame with "
+        "no checkpoint: the capacity is an unpartitioned window over "
+        "the priority x month calendar, and each item's state an "
+        "F.aggregate over a running-window collect_list per partition "
+        "(ROWS UNBOUNDED PRECEDING, ordered by the unique month, so "
+        "every prefix is deterministic); the "
         "emitted (file -> bin) map is exactly the job list a "
         "compactor executes.",
 )
@@ -427,33 +432,40 @@ def compaction_bin_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("m"),
         )
         .agg((F.count("*") * 100).cast("bigint").alias("size"))
-        .localCheckpoint()  # feeds the capacity AND the fold
     )
-    cap = items.agg(
-        (
-            F.lit(_PACK_CAP_X)
-            * F.floor(F.sum("size") / F.count("*")).cast("bigint")
-        ).alias("c")
+    # The windows below see only the priority x month calendar rows; m is
+    # unique per part, so each running collect_list prefix is in month
+    # order and deterministic.
+    everything = Window.partitionBy()
+    with_cap = items.withColumn(
+        "c",
+        F.lit(_PACK_CAP_X)
+        * F.floor(
+            F.sum("size").over(everything) / F.count("*").over(everything)
+        ).cast("bigint"),
     )
-    packed = items.groupBy("part").agg(
-        F.array_sort(F.collect_list(F.struct("m", "size"))).alias("l")
+    cum = (
+        Window.partitionBy("part")
+        .orderBy("m")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    expanded = packed.select(
-        "part", "l", F.explode(F.sequence(F.lit(1), F.size("l"))).alias("t")
-    ).crossJoin(F.broadcast(cap))
     fill_lit = F.lit(_PACK_FILL).cast("long")
     state = F.aggregate(
-        F.transform(F.slice(F.col("l"), F.lit(1), F.col("t")), lambda s: s["size"]),
+        F.collect_list("size").over(cum),
         F.lit(0).cast("long"),
         lambda acc, x: F.when(
             F.pmod(acc, fill_lit) + x > F.col("c"),
             (F.floor(acc / fill_lit).cast("long") + 1) * fill_lit + x,
         ).otherwise(acc + x),
     )
-    return expanded.select(
-        "part",
-        F.element_at("l", F.col("t"))["m"].alias("month_index"),
-        F.element_at("l", F.col("t"))["size"].alias("size"),
-        F.floor(state / fill_lit).cast("bigint").alias("bin"),
-        F.pmod(state, fill_lit).cast("bigint").alias("bin_fill_after"),
-    ).orderBy("part", "month_index")
+    return (
+        with_cap.withColumn("state", state)
+        .select(
+            "part",
+            F.col("m").alias("month_index"),
+            "size",
+            F.floor(F.col("state") / fill_lit).cast("bigint").alias("bin"),
+            F.pmod("state", fill_lit).cast("bigint").alias("bin_fill_after"),
+        )
+        .orderBy("part", "month_index")
+    )

@@ -21,3 +21,17 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+def jobs_in_group(spark, group: str, fn) -> list[int]:
+    """Ids of the Spark jobs that ``fn()`` starts, counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    # The status tracker is fed by the listener bus; drain it so a job that
+    # already ran is counted.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))

@@ -18,7 +18,7 @@ from job_datapipeline_spark import catalog
 from job_datapipeline_spark.schemas import TESTDATA_SCHEMAS
 from perfbench import datagen
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, jobs_in_group
 
 TESTDATA_ROOT = os.path.dirname(SF_SMOKE)
 
@@ -44,19 +44,6 @@ def test_benchmark_tables_match_declared_schemas(spark, tmp_path):
     _assert_footers_match(spark, str(tmp_path))
 
 
-def _jobs_in_group(spark, group: str, fn) -> list[int]:
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    # The status tracker is fed by the listener bus; drain it so a job that
-    # already ran is counted.
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_table_starts_no_job(spark, sf_dir):
     def read_declared():
         for name in catalog.TABLE_NAMES:
@@ -66,10 +53,10 @@ def test_table_starts_no_job(spark, sf_dir):
         for name in catalog.TABLE_NAMES:
             spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
-    assert _jobs_in_group(spark, "catalog-table-declared", read_declared) == []
+    assert jobs_in_group(spark, "catalog-table-declared", read_declared) == []
     # Control: footer inference does start a job per table, so the count
     # above would see one.
-    assert len(_jobs_in_group(spark, "catalog-table-inferred", read_inferred)) >= len(
+    assert len(jobs_in_group(spark, "catalog-table-inferred", read_inferred)) >= len(
         catalog.TABLE_NAMES
     )
 

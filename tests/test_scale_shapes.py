@@ -4,10 +4,13 @@ the things that decide whether a query survives a 100x scale-up."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from job_datapipeline_spark.catalog import table
 from job_datapipeline_spark.plans.queries import REGISTRY
+
+from conftest import jobs_in_group
 
 
 def _plan(df) -> str:
@@ -965,11 +968,19 @@ def test_feature_scaling_stats_broadcast_back(spark, sf_dir):
 
 
 def test_survival_km_single_orders_scan(spark, sf_dir):
-    # weekly frame checkpointed for totals + risk window + final join:
-    # orders is scanned at most once (0 when the eager checkpoint has
-    # already swallowed the scan at plan-build time).
+    # totals, risk set and survival fold are windows over the 53-row week
+    # frame in one linear plan: orders is scanned exactly once, and no
+    # self-join re-reads it.
     plan = _plan(REGISTRY["orders_survival_km"].fn(spark, sf_dir))
-    assert plan.count("orders.parquet]") <= 1
+    assert plan.count("orders.parquet]") == 1
+
+
+@pytest.mark.parametrize("name", ["orders_survival_km", "compaction_bin_packing"])
+def test_window_fold_fn_starts_no_job(spark, sf_dir, name):
+    # totals and prefix folds are windows over a k-row frame inside the
+    # final plan, so building the DataFrame materializes nothing eagerly.
+    fn = REGISTRY[name].fn
+    assert jobs_in_group(spark, f"fn-{name}", lambda: fn(spark, sf_dir)) == []
 
 
 def test_attribution_one_user_sort_serves_both_models(spark, sf_dir):
