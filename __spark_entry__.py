@@ -1,9 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship populator-style query at sf0.001;
-``queries()`` / ``oracle_sql()`` expose the full registry in
-``job_datapipeline_spark/plans/queries.py`` — one entry per implemented
-operator from SURVEY.md §2 plus the extended training-data surface.
+``queries()`` / ``oracle_sql()`` expose the full registry
+(``job_datapipeline_spark/plans/registry.py``, driver window first) — one
+entry per implemented operator from SURVEY.md §2 plus the extended
+training-data surface.
 """
 
 from __future__ import annotations
@@ -20,17 +21,7 @@ _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
 
-from job_datapipeline_spark.plans.queries import (  # noqa: E402
-    REGISTRY,
-    ensure_registry_order,
-)
-
-# The gate hard-checks the FIRST 50 registry entries, so ordering (and the
-# window-integrity assertions) must hold HERE even if some other module
-# imported a plans sibling first and the module-bottom reorder skipped
-# itself (the partial-import guard).  All imports are complete by now, so
-# this always validates.
-ensure_registry_order()
+from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: E402
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 

@@ -31,16 +31,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from job_datapipeline_spark.plans.queries import (  # noqa: E402
-    REGISTRY,
-    ensure_registry_order,
-)
+from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: E402
 from job_datapipeline_spark.session import get_spark  # noqa: E402
-
-# Validate + apply the driver-window ordering here too — the module-bottom
-# reorder skips itself when a plans sibling imports first, and bench timing
-# should iterate the same certified order the gate sees.
-ensure_registry_order()
 
 _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 # The driver's stdout tail is 2000 chars; leave headroom for the newline
@@ -76,6 +68,49 @@ def _fit_line(payload: dict, per_query: dict[str, float]) -> str:
     return json.dumps(out, separators=(",", ":"))
 
 
+def spin_probe() -> float:
+    """Seconds for a fixed 20M-step Python loop.
+
+    Host-speed probe: a shared VM's effective single-core speed can swing
+    2-3x with co-tenant load INVISIBLE to loadavg (0.83 s vs 2.6 s for
+    this loop at load1 < 0.1 on the same day — SCALE_GROWTH.md round-7
+    note). Recording it with every run lets totals be read in context:
+    compare totals only between runs with similar probe times, else use
+    per-query median ratios."""
+    t0 = time.time()
+    x = 0
+    for _ in range(20_000_000):
+        x += 1
+    return round(time.time() - t0, 3)
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Untimed warm-ups that keep session start-up cost out of per-query
+    numbers: one ``pricing_summary`` run (executors, codegen paths), then
+    a 1-row AvailableNow file-source stream with a no-op foreachBatch. The
+    first streaming query in a session otherwise pays the one-time
+    micro-batch-engine / commit-log / state-machinery initialization
+    (~2 s measured) inside its timed runs; the stream touches no registry
+    query."""
+    REGISTRY["pricing_summary"].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    wdir = tempfile.mkdtemp(prefix="bench_stream_warm_")
+    try:
+        spark.range(1).write.parquet(os.path.join(wdir, "src"))
+        (
+            spark.readStream.schema("id long")
+            .parquet(os.path.join(wdir, "src"))
+            .writeStream.trigger(availableNow=True)
+            .option("checkpointLocation", os.path.join(wdir, "ckpt"))
+            .foreachBatch(
+                lambda df, _bid: df.write.format("noop").mode("overwrite").save()
+            )
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        shutil.rmtree(wdir, ignore_errors=True)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -86,19 +121,6 @@ def main() -> None:
     # note), so every record carries the 1-min loadavg at start/end and a
     # loaded run warns loudly. It still runs (the external driver's record
     # must exist), but BENCH_BEST.json below is only updated by clean runs.
-    # Host-speed probe: this VM's effective single-core speed swings
-    # 2-3x with co-tenant load INVISIBLE to loadavg (measured 0.83 s vs
-    # 2.6 s for this fixed loop at load1 < 0.1 on the same day —
-    # SCALE_GROWTH.md round-7 note).  Recording it with every run lets
-    # cross-round totals be read in context: compare totals only between
-    # runs with similar probe times, else use per-query median ratios.
-    def _spin_probe() -> float:
-        t0 = time.time()
-        x = 0
-        for _ in range(20_000_000):
-            x += 1
-        return round(time.time() - t0, 3)
-
     load_start = round(os.getloadavg()[0], 2)
     # Act on the load signal, don't just record it (r5 lesson: the
     # driver's run started at load1 1.52 and the 317 s total was pure
@@ -128,7 +150,7 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    spin = _spin_probe()
+    spin = spin_probe()
     if spin > 1.5:
         print(
             f"WARNING: spin probe {spin}s (fast-phase baseline ~0.85s) — "
@@ -139,31 +161,7 @@ def main() -> None:
 
     spark = get_spark("bench")
 
-    # warmup: spin up executors / codegen paths, untimed
-    REGISTRY["pricing_summary"].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    # streaming warmup, also untimed (r13): the first streaming query in a
-    # session otherwise pays the one-time micro-batch-engine / commit-log /
-    # state-machinery class initialization (~2 s measured) inside its timed
-    # runs — a session-startup cost, not query work, i.e. exactly what the
-    # documented untimed-warmup policy excludes. A 1-row AvailableNow
-    # file-source stream with a no-op foreachBatch initializes that
-    # machinery without touching any registry query.
-    _wdir = tempfile.mkdtemp(prefix="bench_stream_warm_")
-    try:
-        spark.range(1).write.parquet(os.path.join(_wdir, "src"))
-        (
-            spark.readStream.schema("id long")
-            .parquet(os.path.join(_wdir, "src"))
-            .writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(_wdir, "ckpt"))
-            .foreachBatch(
-                lambda df, _bid: df.write.format("noop").mode("overwrite").save()
-            )
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        shutil.rmtree(_wdir, ignore_errors=True)
+    warm_up(spark, sf_dir)
 
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
     per_query: dict[str, float] = {}

@@ -30,7 +30,7 @@ from ..catalog import literal_dim, table
 from ..functions.text import tokenize
 from ..operators.dedup import semantic_prune
 from ..operators.sampling import temperature_sample
-from .queries import register
+from .registry import register
 
 # ---------------------------------------------------------------------------
 # BM25 top-k retrieval

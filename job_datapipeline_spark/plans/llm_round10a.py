@@ -46,12 +46,9 @@ from ..operators.similarity import (
     ivf_index_probe,
     ivf_index_write,
 )
-from .queries import _scratch_dir, register
-from .r10_shared import (
-    R10_IVF_CENTS as _R10_IVF_CENTS,
-    R10_IVF_CENTS_SQL as _R10_IVF_CENTS_SQL,
-    R10_IVF_L2 as _R10_IVF_L2,
-)
+from .queries import _scratch_dir
+from .registry import register
+from .r10_shared import R10_IVF_CENTS, R10_IVF_CENTS_SQL, R10_IVF_L2
 
 
 @register(
@@ -59,7 +56,7 @@ from .r10_shared import (
     oracle=f"""
     WITH cents AS (
         SELECT vec_id AS cid, embedding AS cent FROM embeddings
-        WHERE vec_id IN {_R10_IVF_CENTS_SQL}
+        WHERE vec_id IN {R10_IVF_CENTS_SQL}
     ),
     corp AS (
         SELECT vec_id, embedding FROM embeddings WHERE vec_id % 10 <> 3
@@ -68,7 +65,7 @@ from .r10_shared import (
         SELECT vec_id, embedding, cid AS cell FROM (
             SELECT e.vec_id, e.embedding, c.cid,
                    row_number() OVER (PARTITION BY e.vec_id
-                                      ORDER BY {_R10_IVF_L2}, c.cid) AS r
+                                      ORDER BY {R10_IVF_L2}, c.cid) AS r
             FROM corp e CROSS JOIN cents c) x
         WHERE r = 1
     ),
@@ -76,7 +73,7 @@ from .r10_shared import (
         SELECT q_id, qv, cid AS cell FROM (
             SELECT e.vec_id AS q_id, e.embedding AS qv, c.cid,
                    row_number() OVER (PARTITION BY e.vec_id
-                                      ORDER BY {_R10_IVF_L2}, c.cid) AS r
+                                      ORDER BY {R10_IVF_L2}, c.cid) AS r
             FROM embeddings e CROSS JOIN cents c
             WHERE e.vec_id % 10 = 3 AND e.vec_id < 100) x
         WHERE r <= 2
@@ -127,7 +124,7 @@ def ann_ivf_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _os_path.join(_scratch_dir("ann_ivf_index_roundtrip"), "ivf_index")
 
     # RUN 1: build + persist (quantizer, cell-partitioned corpus, norms).
-    ivf_index_write(base, path, _R10_IVF_CENTS)
+    ivf_index_write(base, path, R10_IVF_CENTS)
     # RUN 2: incremental arrival — only the batch is assigned; the only
     # link to run 1 is the persisted quantizer and the appended partitions.
     ivf_index_append(spark, path, batch)

@@ -41,12 +41,9 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..operators.similarity import ivf_index_append, ivf_index_probe
-from .r10_shared import (
-    R10_IVF_CENTS as _R10_IVF_CENTS,
-    R10_IVF_CENTS_SQL as _R10_IVF_CENTS_SQL,
-    R10_IVF_L2 as _R10_IVF_L2,
-)
-from .queries import _scratch_dir, _stream_state_partitions, register
+from .r10_shared import R10_IVF_CENTS, R10_IVF_CENTS_SQL, R10_IVF_L2
+from .queries import _scratch_dir, _stream_state_partitions
+from .registry import register
 
 _SPLIT_SQL = (
     "('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT % 3"
@@ -66,7 +63,7 @@ def _split_col():
     oracle=f"""
     WITH cents AS (
         SELECT vec_id AS cid, embedding AS cent FROM embeddings
-        WHERE vec_id IN {_R10_IVF_CENTS_SQL}
+        WHERE vec_id IN {R10_IVF_CENTS_SQL}
     ),
     corp AS (
         SELECT vec_id, embedding FROM embeddings WHERE vec_id % 10 <> 3
@@ -75,7 +72,7 @@ def _split_col():
         SELECT vec_id, embedding, cid AS cell FROM (
             SELECT e.vec_id, e.embedding, c.cid,
                    row_number() OVER (PARTITION BY e.vec_id
-                                      ORDER BY {_R10_IVF_L2}, c.cid) AS r
+                                      ORDER BY {R10_IVF_L2}, c.cid) AS r
             FROM corp e CROSS JOIN cents c) x
         WHERE r = 1
     ),
@@ -83,7 +80,7 @@ def _split_col():
         SELECT q_id, qv, cid AS cell FROM (
             SELECT e.vec_id AS q_id, e.embedding AS qv, c.cid,
                    row_number() OVER (PARTITION BY e.vec_id
-                                      ORDER BY {_R10_IVF_L2}, c.cid) AS r
+                                      ORDER BY {R10_IVF_L2}, c.cid) AS r
             FROM embeddings e CROSS JOIN cents c
             WHERE e.vec_id % 10 = 3 AND e.vec_id < 100) x
         WHERE r <= 2
@@ -138,7 +135,7 @@ def streaming_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the roundtrip query) and persisted before any vector arrives —
     # ingest only assigns against it, exactly like a production IVF
     # deployment where re-training is a separate, rare event.
-    corpus.filter(F.col("vec_id").isin(*_R10_IVF_CENTS)).select(
+    corpus.filter(F.col("vec_id").isin(*R10_IVF_CENTS)).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cent")
     ).write.mode("overwrite").parquet(idx + "/centroids")
 

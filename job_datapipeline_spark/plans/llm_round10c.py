@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from .queries import register
+from .registry import register
 
 _PQ_M = 8       # subspaces
 _PQ_SUB = 8     # dims per subspace (8 x 8 = the 64-dim testdata width)

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from .queries import register
+from .registry import register
 
 _KMV_K = 256
 _KMV_SCALE = 1 << 60  # md5 15-hex-digit prefix ceiling

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from .queries import register
+from .registry import register
 
 _MRL_BUDGETS = (8, 16, 32, 64)
 _MRL_TOPK = 5

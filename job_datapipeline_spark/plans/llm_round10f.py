@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import literal_dim, table
 from ..operators.unigram import segment_words
-from .queries import register
+from .registry import register
 
 _UENC_MAX_WORD = 12
 _UENC_MAX_PIECE = 6

@@ -43,7 +43,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..operators.similarity import ivf_assign, ivf_index_probe, ivf_index_write_frame
-from .queries import _scratch_dir, register
+from .queries import _scratch_dir
+from .registry import register
 from .r10_shared import (
     R10_IVF_CENTS as _SEED_IDS,
     R10_IVF_CENTS_SQL as _SEED_IDS_SQL,

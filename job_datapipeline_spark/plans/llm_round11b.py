@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..operators.similarity import ivf_assign
 from .llm_round10c import _PQ_CB_MAX, _PQ_M, _PQ_SUB, _sql_l2sq_micro
-from .queries import register
+from .registry import register
 from .r10_shared import (
     R10_IVF_CENTS as _CENT_IDS,
     R10_IVF_CENTS_SQL as _CENT_IDS_SQL,

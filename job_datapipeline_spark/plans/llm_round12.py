@@ -56,7 +56,8 @@ from ..operators.similarity import (
 )
 from ..functions.vectors import dot as _dot_hof, norm as _norm_hof
 from .llm_round10c import _PQ_CB_MAX, _PQ_M, _PQ_SUB, _sql_l2sq_micro
-from .queries import _scratch_dir, register
+from .queries import _scratch_dir
+from .registry import register
 from .r10_shared import (
     R10_IVF_CENTS as _CENT_IDS,
     R10_IVF_CENTS_SQL as _CENT_IDS_SQL,

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..functions.scale import fan_out
 from ..operators.topk import top_k_per_group
-from .queries import register
+from .registry import register
 
 # ---------------------------------------------------------------------------
 # Domain cap

@@ -29,8 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table  # noqa: F401  (uniform module shape)
-from .queries import register
 from .queries import _scratch_dir
+from .registry import register
 
 _DHASH_NEAR = 10  # Hamming fence for "near duplicate" (of 64 bits)
 

@@ -55,7 +55,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..functions.scale import fan_out
-from .queries import register
+from .registry import register
 
 # ---------------------------------------------------------------------------
 # Bloom-filter membership

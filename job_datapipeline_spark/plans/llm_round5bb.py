@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from .queries import register
+from .registry import register
 
 _BURST_RATE_X = 2  # burst state fires at 2x the base rate
 _BURST_GAMMA_MILLI = 2000  # burst-entry penalty: 2 nats, pinned

@@ -43,7 +43,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..operators.ranks import global_cummin
-from .queries import _scratch_dir, register
+from .queries import _scratch_dir
+from .registry import register
 
 # ---------------------------------------------------------------------------
 # Reciprocal Rank Fusion

@@ -38,7 +38,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from .queries import register
+from .registry import register
 
 # ---------------------------------------------------------------------------
 # PMI collocations

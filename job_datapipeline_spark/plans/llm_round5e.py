@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..operators.ranks import global_cumsum
-from .queries import register
+from .registry import register
 from .llm_round5d import _SCORE_SQL, _score_micro
 
 # ---------------------------------------------------------------------------

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from .queries import register
+from .registry import register
 from .llm_round5b import _bloom_bit_col
 
 # ---------------------------------------------------------------------------

@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..functions.text import tokenize
-from .queries import register
+from .registry import register
 
 # ---------------------------------------------------------------------------
 # Two-proportion z-test

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..operators.ranks import global_cumsum
-from .queries import register
+from .registry import register
 
 # ---------------------------------------------------------------------------
 # Grid-bucketed nearest-neighbor geo join

@@ -43,8 +43,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..functions.text import tokenize
-from .queries import register
 from .queries import _scratch_dir
+from .registry import register
 
 # ---------------------------------------------------------------------------
 # RAKE keyphrases

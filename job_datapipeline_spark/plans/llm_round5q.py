@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..operators.ranks import int_div
-from .queries import register
+from .registry import register
 
 # ---------------------------------------------------------------------------
 # Holt double exponential smoothing

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..operators.ranks import global_cumsum, int_div
-from .queries import register
+from .registry import register
 
 # ---------------------------------------------------------------------------
 # Item-item collaborative filtering

@@ -39,8 +39,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..operators.ranks import global_row_number, ordered_neighbor_carry, int_div
-from .queries import register
 from .queries import _scratch_dir
+from .registry import register
 
 # ---------------------------------------------------------------------------
 # Matched-cohort ATT

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..operators.ranks import global_row_number
-from .queries import register
+from .registry import register
 
 # ---------------------------------------------------------------------------
 # Price waterfall

@@ -38,8 +38,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from .queries import register
 from .queries import _scratch_dir
+from .registry import register
 
 # ---------------------------------------------------------------------------
 # Backfill planner

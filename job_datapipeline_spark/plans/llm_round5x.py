@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..operators.ranks import exact_rank_values, int_div
-from .queries import register
+from .registry import register
 
 # ---------------------------------------------------------------------------
 # Gaussian-mixture EM

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..functions.text import tokenize, word_ngrams
 from ..operators.ranks import exact_ntile, exact_rank_values, int_div
-from .queries import register
+from .registry import register
 
 # ---------------------------------------------------------------------------
 # Lorenz curve of customer spend

@@ -34,7 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from .queries import register, _scratch_dir
+from .queries import _scratch_dir
+from .registry import register
 
 # ---------------------------------------------------------------------------
 # Wilson score interval

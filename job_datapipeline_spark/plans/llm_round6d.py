@@ -37,7 +37,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..operators.ranks import exact_ntile, global_cumsum
-from .queries import register, _scratch_dir
+from .queries import _scratch_dir
+from .registry import register
 from .llm_round5d import _SCORE_SQL, _score_micro
 from .llm_round5e import _CLS_LABEL_CHARS
 from .llm_round6 import _cum_small

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..functions.scale import fan_out
 from ..operators.asof import asof_join
-from .queries import register
+from .registry import register
 
 # ---------------------------------------------------------------------------
 # Time-bound funnel

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..operators.ranks import exact_ntile
-from .queries import register
+from .registry import register
 
 # ---------------------------------------------------------------------------
 # Segment migration

@@ -37,7 +37,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from .queries import register
+from .registry import register
 
 # ---------------------------------------------------------------------------
 # Weekly cohort retention triangle

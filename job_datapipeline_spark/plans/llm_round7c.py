@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..deploy import ensure_shipped
 from ..functions.text import tokenize
-from .queries import register
+from .registry import register
 
 _MG_K = 64  # counters per partition summary; guarantee threshold n/(K+1)
 _MG_TOP = 20  # exact top tokens reported with their verdicts

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..operators.ranks import int_div
-from .queries import register
+from .registry import register
 
 _MK_STEPS = 8
 _MK_CHANNELS = ("click", "error", "signup", "view")  # purchase -> conv

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..operators.rangejoin import bin_range_join
-from .queries import register
+from .registry import register
 
 _RW_HALF_US = 1_800_000_000  # +-30 min in microseconds
 _RW_BIN_US = 3_600_000_000  # 1 h bins ~ the interval width

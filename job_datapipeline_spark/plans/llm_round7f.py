@@ -32,8 +32,8 @@ from .queries import (
     _scratch_dir,
     _toy_frame_decoder,
     _vid_bytes,
-    register,
 )
+from .registry import register
 
 _CUT_THRESH_MICRO = 80_000  # mean-luminance jump >= 0.08 marks a cut
 

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..operators.ranks import exact_rank_values
-from .queries import register
+from .registry import register
 
 # ---------------------------------------------------------------------------
 # k-anonymity / l-diversity audit

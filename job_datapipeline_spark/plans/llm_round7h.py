@@ -29,7 +29,8 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..operators.rangejoin import bin_range_join
 from .llm_round7e import _RW_BIN_US, _RW_HALF_US
-from .queries import _scratch_dir, _stream_state_partitions, register
+from .queries import _scratch_dir, _stream_state_partitions
+from .registry import register
 
 
 @register(

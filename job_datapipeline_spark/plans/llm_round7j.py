@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..operators.ranks import global_cumsum
-from .queries import register
+from .registry import register
 
 _W1_YEAR_A = 1995
 _W1_YEAR_B = 1996

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import literal_dim, table
 from ..operators.rangejoin import bin_range_join, interval_overlap_join
-from .queries import register
+from .registry import register
 
 _EPOCH = "1970-01-01"
 

@@ -27,7 +27,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import literal_dim, table
 
-from .queries import _scratch_dir, register
+from .queries import _scratch_dir
+from .registry import register
 
 # ---------------------------------------------------------------------------
 # Partition stats + zone-map pruning verdict

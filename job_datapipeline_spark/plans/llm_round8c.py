@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from .llm_round6c import _BPE_ROUNDS, _BPE_SEP
-from .queries import register
+from .registry import register
 
 _ENC_TOPK = 48
 

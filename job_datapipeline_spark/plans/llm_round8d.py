@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from .queries import register
+from .registry import register
 
 _LPA_ROUNDS = 3
 _PK_OFFSET = 10_000_000  # disjoint node-id spaces: customers vs parts

@@ -28,8 +28,8 @@ from .queries import (
     _SQL_CORPUS,
     _planted_dedup_artifact,
     _sql_shingles,
-    register,
 )
+from .registry import register
 
 _CURVE_THRESHOLDS = (500, 600, 700, 800, 900)  # permille
 _CURVE_FLOOR = min(_CURVE_THRESHOLDS) / 1000.0

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import table
-from .queries import register
+from .registry import register
 
 # One recursion-scoped child session per SparkContext (keyed by
 # applicationId so a stopped-and-restarted context gets a fresh child,
@@ -77,7 +77,8 @@ def sql_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The walk materializes |part| x (depth + 1) rows; Spark's default
     # cteRecursionRowLimit (1M) is a runaway-recursion safety valve, not
     # a scale budget — at sf1 the 200k-part x 7-level walk already
-    # exceeds it (found by tools/scale_growth_round9.py's depth ladder).
+    # exceeds it (the round-9 depth ladder in SCALE_GROWTH.md; its harness,
+    # tools/scale_growth_round9.py, is in commit 0242173).
     # Depth stays bounded by the level limit (100); raise only the row cap
     # — and ONLY for this query: the limit is read at EXECUTION time of
     # the lazy frame, so a set-and-restore around the builder would undo

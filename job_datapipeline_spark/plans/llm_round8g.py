@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..operators.ranks import exact_ntile
 from .llm_round6 import _cum_small
-from .queries import register
+from .registry import register
 
 _QINI_K = 10
 

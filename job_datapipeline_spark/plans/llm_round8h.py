@@ -33,8 +33,8 @@ from .queries import (
     _SQL_CORPUS,
     _planted_dedup_artifact,
     _sql_shingles,
-    register,
 )
+from .registry import register
 
 # every exact split of the _NDD_HASHES hashes: (bands, rows_per_band)
 _LSH_CONFIGS = tuple(

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..operators.rangejoin import grid_containment_join
 from .llm_round5n import _synth_lat_lon
-from .queries import register
+from .registry import register
 
 _GEO_CELL = 5_000_000  # 5 degrees in micro-degrees
 

@@ -30,7 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .queries import _scratch_dir, _wav_samples, register
+from .queries import _scratch_dir, _wav_samples
+from .registry import register
 
 # (file, block_len_samples, n_frames, mult): sample k is silent unless
 # (k // block) % 2 == 1, where it takes the _wav_samples tone value

@@ -50,7 +50,7 @@ from ..operators.decontam import (
     SEM_THRESHOLD as _DECON_SEM_THRESHOLD,
     cell_probe_flags,
 )
-from .queries import register
+from .registry import register
 
 # Offset for planted (re-inserted) eval ids.  1e6 matches the text-side
 # convention and gives ~500x headroom over sf0.1's max vec_id (1999) —

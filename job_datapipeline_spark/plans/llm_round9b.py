@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..operators.unigram import segment_words as _segment
-from .queries import register
+from .registry import register
 
 _ULM_ROUNDS = 2        # EM prune rounds; the final inventory pass is a 3rd
 _ULM_MAX_PIECE = 4     # max piece length (seed substrings 1..4 chars)

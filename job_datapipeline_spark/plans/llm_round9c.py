@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..operators.sampling import epoch_upsample
-from .queries import register
+from .registry import register
 
 _EPOCH_CAP_MILLI = 2_500     # no source repeats past 2.5 epochs
 _EPOCH_BUDGET_MULT = 2       # global budget = 2x corpus tokens

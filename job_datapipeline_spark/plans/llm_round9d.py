@@ -43,7 +43,8 @@ from ..catalog import table
 from ..operators import decontam as _DC
 from ..operators.decontam import SEM_CENTROID_IDS as _DECON_SEM_CENTROIDS
 from ..operators.decontam import cell_probe_flags
-from .queries import _DECON_N, register
+from .queries import _DECON_N
+from .registry import register
 
 _COV_TAIL = " qq xq zq"
 _COV_T_VERBATIM = 300_000   # text-side id offsets

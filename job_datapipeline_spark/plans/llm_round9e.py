@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from .queries import register
+from .registry import register
 
 _BP_BANNER = "subscribe to our newsletter for daily updates"
 _BP_FOOTER = "copyright example site all rights reserved"

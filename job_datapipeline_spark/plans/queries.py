@@ -1,7 +1,7 @@
-"""The query registry — the engine's public, oracle-checked surface.
-
-Every operator family from SURVEY.md §2 (and the extended training-data
-surface) is exercised by at least one named query here. Each entry is:
+"""The original query surface: at least one named query per operator
+family from SURVEY.md §2. The other plan modules in this package add the
+extended training-data surface. ``plans/registry.py`` holds the registry;
+it is re-exported here as ``REGISTRY`` for existing callers. Each entry is:
 
 - ``fn(spark, sf_dir) -> DataFrame``: the Spark-first plan, and
 - ``oracle``: equivalent ANSI SQL for DuckDB over the same parquet views
@@ -21,9 +21,6 @@ from __future__ import annotations
 import os as _os
 import os.path as _os_path
 
-from collections.abc import Callable
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -32,27 +29,7 @@ from ..functions.scale import fan_out
 from ..functions.text import fingerprint, tokenize
 from ..functions.vectors import cosine
 from ..operators.topk import rank_pivot, top_k_per_group
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-
-@dataclass(frozen=True)
-class Query:
-    name: str
-    fn: QueryFn
-    oracle: str | None
-    doc: str = ""
-
-
-REGISTRY: dict[str, Query] = {}
-
-
-def register(name: str, oracle: str | None = None, doc: str = ""):
-    def deco(fn: QueryFn) -> QueryFn:
-        REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle, doc=doc)
-        return fn
-
-    return deco
+from .registry import REGISTRY, Query, register
 
 
 _SCRATCH_ROOTS: set[str] = set()
@@ -7708,416 +7685,3 @@ def sink_roundtrip_kv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n_orders").alias("n_orders"),
         F.max("total_spend").alias("total_spend"),
     )
-
-
-# ---------------------------------------------------------------------------
-# Registry ordering. The external correctness gate hard-checks the FIRST 50
-# registry entries in insertion order; everything is oracle-green locally
-# (tools/check.py runs all of it), but the hard gate's window should hold
-# the entries with the LEAST prior driver signal. Rounds 1-3 certified 100
-# distinct queries (CORRECTNESS_r01-03, all green); round 4 rotates in 50
-# of the 59 registry entries that have NEVER carried a driver row — the
-# whole tpch_* family, the sketch/bitmap/decimal/multi-distinct/stats
-# aggregates, pagerank, the Python DataSource/UDTF pair, the SCD2/anomaly/
-# sliding/windowed-topk/dynamic-gap event suite, schema evolution, corrupt
-# CSV records, XML, observe/audit, the two judge-only streaming shapes,
-# lateral top-n, and the remaining sinks. The 9 left outside (scalar_array/
-# map/struct/date_arith/explode_outer/try_arithmetic/url/collation/variant
-# _ops) are single-expression surface queries shadowed by r1-certified
-# siblings (scalar_string_ops, scalar_date_ops, scalar_json_props) and
-# green in two full judge re-runs — the lowest-risk residue by design.
-# After this round every other registry entry will have a hard driver row
-# (target: >=150/159 cumulative).
-#
-# Round-8 closed the certification endgame: every registry entry now has
-# at least one hard driver-gate green row (cumulative CORRECTNESS_r01-r08).
-# From round 9 on, the committed rotation policy applies — REVISED in
-# round 10 per the r9 verdict (defects 1 and 2): each round's 50-slot
-# window =
-#   1. all same-round NEW queries, then
-#   2. the CHANGED-CODE LANE: every certified query whose plan/operator
-#      code the round's diff touches (the hard gate must re-see code it
-#      certified — builder-side mirrors are not the driver's signal), then
-#   3. the entries with the OLDEST LAST-certification per
-#      ``python tools/cert_ledger.py`` (oldest round first, name asc
-#      within a round), filled to exactly 50.
-# The ledger tracks the LATEST green round (r10 fix — a first-certified
-# ledger re-picks the same 50 forever); certification age stays bounded
-# at ~(registry/38) rounds with zero further bookkeeping.
-#
-# Round-10 window: 6 new + 13 changed-code (the exact_rank_values guard
-# move touched its 5 consumers; the ivf_topk assignment refactor touched
-# ann_ivf_topk; the dedup-artifact memo eviction touched its 3 consumers;
-# the cteRecursionRowLimit scoping touched sql_recursive_hierarchy; the
-# planted-offset raise + in-plan guards touched the two r9 decontam
-# queries; the Viterbi-device extraction touched tokenizer_unigram_lm)
-# + the 5 unrotated r2 entries + the 26 alphabetically-first r3 entries
-# (ann_ivf_topk excluded there — already in the lane).
-# ---------------------------------------------------------------------------
-
-_R10_NEW = (
-    "ann_ivf_index_roundtrip",
-    "streaming_ann_index_ingest",
-    "ann_pq_adc_topk",
-    "agg_kmv_theta_sketch_ops",
-    "embedding_matryoshka_overlap",
-    "tokenizer_unigram_encode",
-)
-
-_R10_CHANGED = (
-    # exact_rank_values integrality-guard move (operators/ranks.py)
-    "agg_exact_median_mad",
-    "agg_median_ci_binomial",
-    "agg_winsorized_mean",
-    "layout_range_boundaries",
-    "ml_em_gaussian_mixture",
-    # ivf_assign extraction (operators/similarity.py)
-    "ann_ivf_topk",
-    # _DEDUP_ARTIFACTS eviction-on-insert (this module)
-    "corpus_dedup_threshold_curve",
-    "dedup_lsh_tuning_curve",
-    "dedup_minhash_estimate_accuracy",
-    # child-session conf scoping (plans/llm_round8f.py)
-    "sql_recursive_hierarchy",
-    # planted-offset raise + in-plan source-id guards (llm_round9a/9d)
-    "corpus_decontaminate_semantic",
-    "corpus_decontaminate_coverage",
-    # Viterbi device extraction to operators/unigram (llm_round9b)
-    "tokenizer_unigram_lm",
-)
-
-_R10_STALEST = (
-    # the 5 unrotated r2 certifications (ledger order)
-    "html_extract_listing",
-    "html_harvest_links",
-    "multimodal_blob_stats",
-    "point_lookup_customer",
-    "populator_contains_match",
-    # then r3 certifications, name asc, skipping lane members
-    "agg_approx_distinct",
-    "agg_grouping_sets",
-    "agg_histogram",
-    "agg_moments_exact",
-    "agg_percentiles",
-    "agg_percentiles_approx",
-    "agg_unpivot_metrics",
-    "cleaner_csv_end_to_end",
-    "corpus_curation",
-    "corpus_decontaminate",
-    "corpus_funnel_report",
-    "corpus_mixture_sample",
-    "corpus_pack_sequences",
-    "corpus_sample_bernoulli",
-    "corpus_sample_stratified",
-    "corpus_split_train_eval",
-    "corpus_weighted_sample",
-    "dedup_cluster_representatives",
-    "dedup_common_spans",
-    "dedup_components",
-    "dedup_containment_pairs",
-    "dedup_edit_distance_verify",
-    "dedup_incremental_batch",
-    "dedup_simhash_pairs",
-    "embedding_kmeans_refine",
-    "events_funnel",
-)
-
-_R9_NEW = (
-    # round-9 additions, certified in round 9's own window
-    "corpus_decontaminate_semantic",
-    "tokenizer_unigram_lm",
-    "corpus_epoch_upsample",
-    "corpus_decontaminate_coverage",
-    "text_boilerplate_lines",
-)
-
-_R9_STALEST = (
-    # 36 r1 certifications (name asc) ...
-    "agg_cube",
-    "agg_distinct",
-    "agg_rollup",
-    "ann_cosine_topk",
-    "argmax_latest_event",
-    "cleaner_company_size",
-    "cleaner_full_stage",
-    "cleaner_salary_parse",
-    "cleaner_scalar_ops",
-    "dedup_exact_docs",
-    "events_hourly_rollup",
-    "events_sessionize",
-    "join_anti_customers_without_orders",
-    "join_cross_region_status",
-    "join_full_outer_nation_stats",
-    "join_left_customer_orders",
-    "join_range_price_band",
-    "join_semi_parts_shipped",
-    "orderby_limit_top_parts",
-    "populator_top_skills_kv",
-    "pricing_summary",
-    "revenue_by_nation",
-    "scalar_case_null",
-    "scalar_date_ops",
-    "scalar_json_props",
-    "scalar_string_ops",
-    "setops_segments",
-    "text_lang_id",
-    "text_quality",
-    "text_stats",
-    "top_skills_by_lang",
-    "top_skills_pivot",
-    "topk_orders_per_customer",
-    "window_lag_lead",
-    "window_moving_avg",
-    "window_running_total",
-    # ... then 14 r2 certifications (name asc)
-    "ann_lsh_topk",
-    "csv_source_scan",
-    "dedup_embedding_composed",
-    "dedup_embedding_pairs",
-    "dedup_jaccard_pairs",
-    "dedup_lsh_candidates",
-    "dedup_minhash_signatures",
-    "dedup_near_composed",
-    "dedup_simhash",
-    "html_extract_listing",
-    "html_harvest_links",
-    "multimodal_blob_stats",
-    "point_lookup_customer",
-    "populator_contains_match",
-)
-
-# ---------------------------------------------------------------------------
-# Round-12 window (optimization round): 2 new + 25 changed-code + 23
-# stalest (the leading r4 certifications by ledger order), per
-# `python tools/cert_ledger.py`.  The changed-code lane covers every
-# query whose EXECUTABLE plan changed in the r12 optimization pass
-# (OPTIMIZATION_r12.md): direct fan_out/narrowing edits
-# (agg_poisson_bootstrap_ci, graph_pagerank_bipartite, text_repetition,
-# dedup_common_spans, text_winnow_fingerprints, dedup_simhash_pairs,
-# layout_dpp_prune, quality_profile_columns, scalar_try_arithmetic,
-# dedup_containment_pairs), the decontam.ngram_overlap_flags corpus
-# fan_out (corpus_decontaminate, corpus_decontaminate_coverage,
-# corpus_funnel_report), the session-memo corpus/capped_corpus fan_out
-# (the nine memo consumers), and the similarity.py index-write changes —
-# write-side repartition-by-cell + the single-assign pq append —
-# (ann_ivf_trained_index, ann_ivf_index_roundtrip,
-# streaming_ann_index_ingest; the two NEW queries cover the rest).
-# ---------------------------------------------------------------------------
-
-_R12_NEW = (
-    "ann_ivf_pq_index",
-    "ann_ivf_filtered_probe",
-)
-
-_R12_CHANGED = (
-    # similarity.py index-write path (repartition-by-cell, single-assign
-    # pq append)
-    "ann_ivf_trained_index",
-    "ann_ivf_index_roundtrip",
-    "streaming_ann_index_ingest",
-    # direct r12 optimization edits
-    "agg_poisson_bootstrap_ci",
-    "graph_pagerank_bipartite",
-    "text_repetition",
-    "dedup_common_spans",
-    "text_winnow_fingerprints",
-    "dedup_simhash_pairs",
-    "layout_dpp_prune",
-    "quality_profile_columns",
-    "scalar_try_arithmetic",
-    "dedup_containment_pairs",
-    # via operators/decontam.ngram_overlap_flags
-    "corpus_decontaminate",
-    "corpus_decontaminate_coverage",
-    "corpus_funnel_report",
-    # via the _planted_dedup_artifact corpus/capped_corpus fan_out
-    "dedup_lsh_candidates",
-    "dedup_jaccard_pairs",
-    "dedup_near_composed",
-    "dedup_components",
-    "dedup_edit_distance_verify",
-    "dedup_cluster_representatives",
-    "dedup_minhash_estimate_accuracy",
-    "corpus_dedup_threshold_curve",
-    "dedup_lsh_tuning_curve",
-)
-
-_R12_STALEST = (
-    # the leading r4 certifications (ledger order: name asc);
-    # graph_pagerank_bipartite moved to the changed lane above
-    "agg_robust_mad",
-    "agg_sketch_mergeable",
-    "agg_stats_suite",
-    "agg_string_concat_groups",
-    "csv_corrupt_records",
-    "events_anomaly_zscore",
-    "events_scd2_islands",
-    "events_sessionize_dynamic_gap",
-    "events_sliding_windows",
-    "events_windowed_topk",
-    "join_lateral_topn",
-    "join_null_safe_eq",
-    "multimodal_image_resize",
-    "multimodal_video_frames",
-    "observe_audit_metrics",
-    "parquet_schema_evolution",
-    "pivot_multi_agg",
-    "python_datasource_scan",
-    "python_datasource_write_roundtrip",
-    "python_udtf_regex_spans",
-    "quality_constraint_checks",
-    "rollup_incremental_merge",
-    "scrape_url_worklist",
-)
-
-_DRIVER_WINDOW_FIRST = (
-    _R12_NEW
-    + _R12_CHANGED
-    + _R12_STALEST[: 50 - len(_R12_NEW) - len(_R12_CHANGED)]
-)
-
-def _in_partial_plans_import() -> bool:
-    """True when this module body runs inside a CIRCULAR import started by
-    a sibling plans module — the shape a Spark Python worker produces when
-    it unpickles a by-reference function (worker imports llm_roundNx ->
-    .queries -> the bottom-of-file chain gets the still-initializing
-    sibling back from sys.modules, so its register() calls below the
-    import point have not run yet).  In that context REGISTRY order is
-    irrelevant (workers only need the module-level helpers), so the
-    window-integrity assertions must not fire on the incomplete set."""
-    import sys as _sys
-
-    pkg = __name__.rsplit(".", 1)[0] + "."
-    for name, mod in list(_sys.modules.items()):
-        if name.startswith(pkg) and not name.endswith(".queries"):
-            spec = getattr(mod, "__spec__", None)
-            if spec is not None and getattr(spec, "_initializing", False):
-                return True
-    return False
-
-
-def _reorder_registry() -> None:
-    if _in_partial_plans_import():
-        return
-    missing = [n for n in _DRIVER_WINDOW_FIRST if n not in REGISTRY]
-    if missing:
-        raise AssertionError(f"priority list names unknown queries: {missing}")
-    if len(set(_DRIVER_WINDOW_FIRST)) != len(_DRIVER_WINDOW_FIRST):
-        raise AssertionError("duplicate names in priority list")
-    if len(_R12_NEW) > 14:
-        raise AssertionError(
-            "registry growth cap exceeded (verdict: <= ~14 new per round so "
-            f"the stalest rotation keeps pace), got {len(_R12_NEW)} new"
-        )
-    overlap = set(_R12_CHANGED) & set(_R12_STALEST)
-    if overlap:
-        raise AssertionError(
-            f"lane/stalest overlap (list each query once): {sorted(overlap)}"
-        )
-    if len(_DRIVER_WINDOW_FIRST) != 50:
-        raise AssertionError(
-            f"driver window must fill all 50 slots, got "
-            f"{len(_DRIVER_WINDOW_FIRST)}"
-        )
-    head = set(_DRIVER_WINDOW_FIRST)
-    ordered = {n: REGISTRY[n] for n in _DRIVER_WINDOW_FIRST}
-    ordered.update({n: q for n, q in REGISTRY.items() if n not in head})
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
-
-
-from . import llm_extras  # noqa: E402,F401  (BM25 / temperature sampling / SemDeDup)
-from . import tpch_full  # noqa: E402,F401  (registers the 13 remaining TPC-H shapes)
-from . import llm_round5  # noqa: E402,F401  (domain cap / BPE pairs / DSIR / mix budget)
-from . import llm_round5b  # noqa: E402,F401  (bloom / count-min / blocklist / mojibake / profiler / mean-pool)
-from . import llm_round5c  # noqa: E402,F401  (RRF fusion / snapshot diff / join-size estimate / ORC sink / skyline)
-from . import llm_round5d  # noqa: E402,F401  (PMI / curriculum / incremental MV / preference pairs / diversity / Gini)
-from . import llm_round5e  # noqa: E402,F401  (interpolation / negative sampling / skew diagnosis / classification metrics / AUC)
-from . import llm_round5f  # noqa: E402,F401  (CUSUM drift / triangles / bloom-prefilter join / market basket)
-from . import llm_round5g  # noqa: E402,F401  (SCD2 apply / quality ablation / PSI drift)
-from . import llm_round5h  # noqa: E402,F401  (calibration ECE / Markov transitions / RFM / cohort LTV)
-from . import llm_round5i  # noqa: E402,F401  (DAU-WAU-MAU / ABC classes / native session windows / readability)
-from . import llm_round5j  # noqa: E402,F401  (new-user growth / weighted median / purchase gaps / bot detection)
-from . import llm_round5k  # noqa: E402,F401  (interval sweep / exact mode / SLO budget / seasonality index)
-from . import llm_round5l  # noqa: E402,F401  (EWMA / Kaplan-Meier / OLS trend / Benford / Gram matrix)
-from . import llm_round5m  # noqa: E402,F401  (A/B z-test / chi2 independence / affinity / sparse cosine / cascade delete)
-from . import llm_round5n  # noqa: E402,F401  (grid NN geo join / KS test / Mann-Whitney / trimmed mean)
-from . import llm_round5o  # noqa: E402,F401  (RAKE keyphrases / Z-order tiles / scan provenance / bin packing)
-from . import llm_round5p  # noqa: E402,F401  (MMR diverse top-k / duplicate invoices / reorder rate)
-from . import llm_round5q  # noqa: E402,F401  (Holt smoothing / k-core peel / Theil-Sen)
-from . import llm_round5r  # noqa: E402,F401  (feature scaling / TWAP / aging buckets)
-from . import llm_round5s  # noqa: E402,F401  (item-item CF / ABC-XYZ / seasonal anomalies)
-from . import llm_round5t  # noqa: E402,F401  (matched cohort / star mart build / cycle time)
-from . import llm_round5u  # noqa: E402,F401  (price waterfall / supplier scorecard / attribution models)
-from . import llm_round5v  # noqa: E402,F401  (backfill planner / embedding isotropy / RLE paths)
-from . import llm_round5w  # noqa: E402,F401  (bucketed-layout co-located join)
-from . import llm_round5x  # noqa: E402,F401  (Gaussian-mixture EM / revenue bridge)
-from . import llm_round5y  # noqa: E402,F401  (customer feature-store build)
-from . import llm_round5z  # noqa: E402,F401  (forecast backtest / discount lift / Little's law)
-from . import llm_round5aa  # noqa: E402,F401  (perceptual image dHash near-dedup)
-from . import llm_round5bb  # noqa: E402,F401  (integer-Viterbi burst detection)
-from . import llm_round5cc  # noqa: E402,F401  (SPC p-chart / difference-in-differences)
-from . import llm_round6  # noqa: E402,F401  (Lorenz curve / length deciles / exact median-MAD / Heaps law / n-gram novelty)
-from . import llm_round6b  # noqa: E402,F401  (Wilson CI / path trigrams / quarantine split)
-from . import llm_round6c  # noqa: E402,F401  (PCA power iteration / BPE merge learning)
-from . import llm_round6d  # noqa: E402,F401  (PR curve-AP / gains table / Neyman allocation / JSONL sink)
-from . import llm_round6e  # noqa: E402,F401  (time-bound funnel / Poisson bootstrap CI / dow-hour heatmap)
-from . import llm_round6f  # noqa: E402,F401  (char entropy / supplier HHI / Fano burstiness)
-from . import llm_round6g  # noqa: E402,F401  (segment migration / Hill tail index)
-from . import llm_round6h  # noqa: E402,F401  (winsorized mean)
-from . import llm_round7  # noqa: E402,F401  (HLL-sketch DAU/WAU/MAU escalation)
-from . import llm_round7b  # noqa: E402,F401  (retention triangle / CUPED / leakage-safe split / fuzzy blocking)
-from . import llm_round7c  # noqa: E402,F401  (Misra-Gries mergeable heavy hitters)
-from . import llm_round7d  # noqa: E402,F401  (Markov removal-effect attribution)
-from . import llm_round7e  # noqa: E402,F401  (binned point-in-interval range join)
-from . import llm_round7f  # noqa: E402,F401  (video scene-cut detection)
-from . import llm_round7g  # noqa: E402,F401  (k-anonymity audit / binomial median CI)
-from . import llm_round7h  # noqa: E402,F401  (streaming stream-static binned range join)
-from . import llm_round7i  # noqa: E402,F401  (IPF raking corpus reweighting)
-from . import llm_round7j  # noqa: E402,F401  (exact 1-D Wasserstein shift)
-from . import llm_round8a  # noqa: E402,F401  (interval-overlap join family: overlaps / CIDR LPM / SCD2 PIT / FIFO)
-from . import llm_round8b  # noqa: E402,F401  (layout: partition stats / range boundaries / dynamic partition pruning)
-from . import llm_round8c  # noqa: E402,F401  (tokenizer_bpe_encode: distributed merge-table application)
-from . import llm_round8d  # noqa: E402,F401  (graph_label_propagation: pinned synchronous LPA communities)
-from . import llm_round8e  # noqa: E402,F401  (corpus_dedup_threshold_curve: one candidate pass, five thresholds)
-from . import llm_round8f  # noqa: E402,F401  (sql_recursive_hierarchy: Spark 4.1 WITH RECURSIVE surface)
-from . import llm_round8g  # noqa: E402,F401  (ml_uplift_qini: uplift-model evaluation curve)
-from . import llm_round8h  # noqa: E402,F401  (dedup_lsh_tuning_curve: measured bands x rows S-curve)
-from . import llm_round8i  # noqa: E402,F401  (geo_point_in_rect_join: 2-D grid containment, the geohash pattern)
-from . import llm_round8j  # noqa: E402,F401  (multimodal_audio_vad: energy-threshold voice activity over WAV bytes)
-from . import llm_round9a  # noqa: E402,F401  (corpus_decontaminate_semantic: cross-corpus SemDeDup-cell probe)
-from . import llm_round9b  # noqa: E402,F401  (tokenizer_unigram_lm: SentencePiece-style EM-prune training)
-from . import llm_round9c  # noqa: E402,F401  (corpus_epoch_upsample: epoch-capped repeat mixture)
-from . import llm_round9d  # noqa: E402,F401  (corpus_decontaminate_coverage: method contingency table)
-from . import llm_round9e  # noqa: E402,F401  (text_boilerplate_lines: corpus-frequency furniture filter)
-from . import llm_round10a  # noqa: E402,F401  (ann_ivf_index_roundtrip: persistent IVF index write/append/probe)
-from . import llm_round10b  # noqa: E402,F401  (streaming_ann_index_ingest: AvailableNow arrivals into the persisted IVF index)
-from . import llm_round10c  # noqa: E402,F401  (ann_pq_adc_topk: product quantization, integer ADC lookup scan)
-from . import llm_round10d  # noqa: E402,F401  (agg_kmv_theta_sketch_ops: mergeable distinct sketches with union/intersection)
-from . import llm_round10e  # noqa: E402,F401  (embedding_matryoshka_overlap: prefix-dim truncation quality curve)
-from . import llm_round10f  # noqa: E402,F401  (tokenizer_unigram_encode: fixed-vocab Viterbi inference + byte fallback)
-from . import llm_round11a  # noqa: E402,F401  (ann_ivf_trained_index: Lloyd-trained quantizer -> persisted IVF -> probe)
-from . import llm_round11b  # noqa: E402,F401  (ann_ivf_pq_topk: faiss-IVFPQ hybrid — cell-pruned integer ADC scan)
-from . import llm_round11c  # noqa: E402,F401  (ann_filtered_topk: metadata-filtered vector search, pre- vs post-filter)
-from . import llm_round12  # noqa: E402,F401  (ann_ivf_pq_index: cell-keyed stored PQ codes; ann_ivf_filtered_probe: predicate-pruned probe)
-
-def ensure_registry_order() -> None:
-    """Idempotent reorder + window-integrity assertions, for callers that
-    NEED the driver-window ordering (the gate surface __spark_entry__.py).
-
-    The module-bottom call below skips itself inside a CIRCULAR import
-    started by a sibling plans module — the Spark-worker unpickle shape,
-    but also any driver-side process that imports a round module before
-    queries (several tests do).  In those processes the registry stays
-    unordered and UNVALIDATED; this hook closes the hole for consumers
-    that matter: by the time __spark_entry__ (or a test) calls it, every
-    plans module has finished importing, so the assertions always run."""
-    if _in_partial_plans_import():
-        raise RuntimeError(
-            "ensure_registry_order() called while a plans module is still "
-            "initializing — order cannot be established here"
-        )
-    _reorder_registry()
-
-
-_reorder_registry()

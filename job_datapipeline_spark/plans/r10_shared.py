@@ -1,7 +1,5 @@
-"""Round-10 shared IVF constants — in a module with NO .queries import
-so sibling plan modules (llm_round10a/llm_round10b) can both use them
-without re-entering the registry's bottom-of-file import chain (the
-circular-import shape _in_partial_plans_import documents).
+"""IVF constants shared by the persisted-index ANN plan modules
+(llm_round10a, llm_round10b, llm_round11a-c, llm_round12).
 """
 
 from __future__ import annotations

@@ -5,13 +5,13 @@ exact bitwise complement, and dhash_bits round-trips int64 signs)."""
 
 from __future__ import annotations
 
-from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: F401
-from job_datapipeline_spark.plans.llm_round5aa import (  # noqa: E402
+from job_datapipeline_spark.plans.llm_round5aa import (
     _DHASH_FIXTURES,
     _DHASH_NEAR,
     _bmp_bytes_for,
     _golden_dhash,
 )
+from job_datapipeline_spark.plans.registry import REGISTRY
 from job_datapipeline_spark.sources.multimodal import (
     bmp_luminance_matrix,
     dhash_bits,

@@ -14,8 +14,7 @@ import math
 from collections import Counter
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: F401  (must initialize the plans package before importing a submodule)
-from job_datapipeline_spark.plans.llm_round5b import (  # noqa: E402
+from job_datapipeline_spark.plans.llm_round5b import (
     _BLOCK_RULES,
     _BLOOM_K,
     _BLOOM_M,
@@ -23,6 +22,7 @@ from job_datapipeline_spark.plans.llm_round5b import (  # noqa: E402
     _CMS_PROBE,
     _CMS_W,
 )
+from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE
 

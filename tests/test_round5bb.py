@@ -9,11 +9,11 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: F401
-from job_datapipeline_spark.plans.llm_round5bb import (  # noqa: E402
+from job_datapipeline_spark.plans.llm_round5bb import (
     _BURST_GAMMA_MILLI,
     _BURST_RATE_X,
 )
+from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE
 

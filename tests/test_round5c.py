@@ -10,14 +10,14 @@ import hashlib
 from collections import Counter
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: F401  (initializes the plans package)
-from job_datapipeline_spark.plans.llm_round5c import (  # noqa: E402
+from job_datapipeline_spark.plans.llm_round5c import (
     _DIFF_ADD_OFFSET,
     _RRF_K,
     _RRF_OUT,
     _RRF_TERMS,
     _RRF_TOPN,
 )
+from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE
 

@@ -10,14 +10,14 @@ import math
 from collections import Counter
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: F401  (initializes the plans package)
-from job_datapipeline_spark.plans.llm_round5d import (  # noqa: E402
+from job_datapipeline_spark.plans.llm_round5d import (
     _CURRICULUM_BUDGET,
     _MV_ADD_OFFSET,
     _PAIR_MARGIN_MICRO,
     _PMI_MIN_PAIR,
     _PMI_TOPK,
 )
+from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE
 

@@ -12,8 +12,7 @@ import math
 from collections import Counter
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: F401  (initializes the plans package)
-from job_datapipeline_spark.plans.llm_round5e import (  # noqa: E402
+from job_datapipeline_spark.plans.llm_round5e import (
     _CLS_LABEL_CHARS,
     _CLS_SCORE_THRESHOLD,
     _NEG_BUCKETS,
@@ -21,6 +20,7 @@ from job_datapipeline_spark.plans.llm_round5e import (  # noqa: E402
     _NEG_SALT,
     _SKEW_TOPK,
 )
+from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE
 

@@ -12,8 +12,7 @@ from collections import Counter, defaultdict
 from datetime import datetime
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: F401  (initializes the plans package)
-from job_datapipeline_spark.plans.llm_round5f import (  # noqa: E402
+from job_datapipeline_spark.plans.llm_round5f import (
     _BASKET_MIN_SUPPORT,
     _BASKET_TOPK,
     _CUSUM_STEP_FROM,
@@ -23,6 +22,7 @@ from job_datapipeline_spark.plans.llm_round5f import (  # noqa: E402
     _PREF_M,
     _PREF_SEGMENT,
 )
+from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE
 

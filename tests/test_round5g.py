@@ -10,8 +10,7 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: F401  (initializes the plans package)
-from job_datapipeline_spark.plans.llm_round5g import (  # noqa: E402
+from job_datapipeline_spark.plans.llm_round5g import (
     _ABL_ALPHA_MICRO,
     _ABL_MIN_CHARS,
     _ABL_MWL_HI,
@@ -20,6 +19,7 @@ from job_datapipeline_spark.plans.llm_round5g import (  # noqa: E402
     _SCD2_INSERT_OFFSET,
     _SCD2_OPEN,
 )
+from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE
 

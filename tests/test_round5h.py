@@ -10,11 +10,11 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: F401  (initializes the plans package)
-from job_datapipeline_spark.plans.llm_round5h import (  # noqa: E402
+from job_datapipeline_spark.plans.llm_round5h import (
     _CAL_BUCKET_MICRO,
     _CAL_LABEL_CHARS,
 )
+from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE
 

@@ -12,8 +12,8 @@ from collections import defaultdict
 from datetime import timedelta
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: F401  (initializes the plans package)
-from job_datapipeline_spark.plans.llm_round5i import _SW_GAP_MIN  # noqa: E402
+from job_datapipeline_spark.plans.llm_round5i import _SW_GAP_MIN
+from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE
 

@@ -10,8 +10,7 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: F401  (initializes the plans package)
-from job_datapipeline_spark.plans.llm_round5j import (  # noqa: E402
+from job_datapipeline_spark.plans.llm_round5j import (
     _BOT_CV2_DEN,
     _BOT_EVENTS,
     _BOT_MIN_GAPS,
@@ -19,6 +18,7 @@ from job_datapipeline_spark.plans.llm_round5j import (  # noqa: E402
     _BOT_START_US,
     _BOT_USER,
 )
+from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE
 

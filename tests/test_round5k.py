@@ -10,8 +10,8 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: F401  (initializes the plans package)
-from job_datapipeline_spark.plans.llm_round5k import _SLO_DEN, _SLO_NUM  # noqa: E402
+from job_datapipeline_spark.plans.llm_round5k import _SLO_DEN, _SLO_NUM
+from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE
 

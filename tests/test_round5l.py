@@ -10,13 +10,13 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: F401
-from job_datapipeline_spark.plans.llm_round5l import (  # noqa: E402
+from job_datapipeline_spark.plans.llm_round5l import (
     _BENFORD_MICRO,
     _GRAM_DIMS,
     _KM_HORIZON_WEEKS,
     _KM_PACK,
 )
+from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE
 

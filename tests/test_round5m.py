@@ -11,13 +11,13 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: F401
-from job_datapipeline_spark.plans.llm_round5m import (  # noqa: E402
+from job_datapipeline_spark.plans.llm_round5m import (
     _AB_Z_CRIT,
     _COS_DF_PCT,
     _COS_TOPK,
     _DELETE_MOD,
 )
+from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE
 

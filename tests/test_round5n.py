@@ -10,8 +10,7 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: F401
-from job_datapipeline_spark.plans.llm_round5n import (  # noqa: E402
+from job_datapipeline_spark.plans.llm_round5n import (
     _GEO_CELL_DEG,
     _KS_CRIT_MICRO2,
     _KS_G1,
@@ -19,6 +18,7 @@ from job_datapipeline_spark.plans.llm_round5n import (  # noqa: E402
     _TRIM_PCT_DEN,
     _TRIM_PCT_NUM,
 )
+from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE
 

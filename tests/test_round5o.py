@@ -10,13 +10,13 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: F401
-from job_datapipeline_spark.plans.llm_round5o import (  # noqa: E402
+from job_datapipeline_spark.plans.llm_round5o import (
     _PACK_CAP_X,
     _PACK_FILL,
     _RAKE_STOPWORDS,
     _Z_TILE_SHIFT,
 )
+from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE
 

@@ -10,13 +10,13 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: F401
-from job_datapipeline_spark.plans.llm_round5p import (  # noqa: E402
+from job_datapipeline_spark.plans.llm_round5p import (
     _DUPINV_BAND,
     _DUPINV_WINDOW_DAYS,
     _MMR_K,
     _MMR_POOL,
 )
+from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE
 

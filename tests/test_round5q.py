@@ -10,12 +10,12 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: F401
-from job_datapipeline_spark.plans.llm_round5q import (  # noqa: E402
+from job_datapipeline_spark.plans.llm_round5q import (
     _HOLT_H,
     _KCORE_K,
     _KCORE_ROUNDS,
 )
+from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE
 

@@ -9,13 +9,13 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: F401
-from job_datapipeline_spark.plans.llm_round5s import (  # noqa: E402
+from job_datapipeline_spark.plans.llm_round5s import (
     _ANOM_K,
     _CF_HOT_CAP,
     _CF_SAMPLE_MOD,
     _CF_TOPK,
 )
+from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE
 

@@ -10,13 +10,13 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: F401
-from job_datapipeline_spark.plans.llm_round5u import (  # noqa: E402
+from job_datapipeline_spark.plans.llm_round5u import (
     _SCORE_TOPK,
     _SCORE_W_REVENUE,
     _SCORE_W_SPEED,
     _SCORE_W_VOLUME,
 )
+from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE
 

@@ -10,11 +10,11 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: F401
-from job_datapipeline_spark.plans.llm_round5v import (  # noqa: E402
+from job_datapipeline_spark.plans.llm_round5v import (
     _BACKFILL_SKIP_MOD,
     _RLE_TOPK,
 )
+from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE
 

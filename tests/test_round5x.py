@@ -9,12 +9,12 @@ import math
 from collections import defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: F401
-from job_datapipeline_spark.plans.llm_round5x import (  # noqa: E402
+from job_datapipeline_spark.plans.llm_round5x import (
     _BRIDGE_Y1,
     _BRIDGE_Y2,
     _EM_ITERS,
 )
+from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE
 

@@ -9,8 +9,8 @@ import math
 from collections import defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: F401
-from job_datapipeline_spark.plans.llm_round5y import _CHURN_WINDOW_DAYS  # noqa: E402
+from job_datapipeline_spark.plans.llm_round5y import _CHURN_WINDOW_DAYS
+from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE
 

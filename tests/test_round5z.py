@@ -11,8 +11,8 @@ from collections import Counter, defaultdict
 from datetime import timedelta
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: F401
-from job_datapipeline_spark.plans.llm_round5z import _BT_H  # noqa: E402
+from job_datapipeline_spark.plans.llm_round5z import _BT_H
+from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE
 

@@ -3,9 +3,9 @@ optionally dump .explain("formatted") per query.
 
 Usage: python tools/bench_subset.py [--sf DIR] [--runs N] [--explain DIR] q1 q2 ...
 
-The measurement methodology matches bench.py (noop sink, min-of-N,
-untimed batch + streaming warmups) so numbers are comparable to
-BENCH_FULL.json entries.
+The measurement methodology is bench.py's (noop sink, min-of-N, and
+bench.py's own spin probe and untimed warm-ups) so numbers are
+comparable to BENCH_FULL.json entries.
 """
 
 from __future__ import annotations
@@ -14,18 +14,15 @@ import argparse
 import io
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from job_datapipeline_spark.plans.queries import REGISTRY, ensure_registry_order  # noqa: E402
+from bench import spin_probe, warm_up  # noqa: E402
+from job_datapipeline_spark.plans.queries import REGISTRY  # noqa: E402
 from job_datapipeline_spark.session import get_spark  # noqa: E402
-
-ensure_registry_order()
 
 
 def main() -> None:
@@ -41,32 +38,10 @@ def main() -> None:
     if unknown:
         ap.error(f"unknown queries (not in REGISTRY): {', '.join(unknown)}")
 
-    t0 = time.time()
-    x = 0
-    for _ in range(20_000_000):
-        x += 1
-    print(f"spin_probe {round(time.time() - t0, 3)}s (fast phase ~0.85)", flush=True)
+    print(f"spin_probe {spin_probe()}s (fast phase ~0.85)", flush=True)
 
     spark = get_spark("bench-subset")
-    # warmups, untimed — batch (codegen/session) + streaming machinery,
-    # mirroring bench.py
-    REGISTRY["pricing_summary"].fn(spark, args.sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    wdir = tempfile.mkdtemp(prefix="subset_stream_warm_")
-    try:
-        spark.range(1).write.parquet(os.path.join(wdir, "src"))
-        (
-            spark.readStream.schema("id long")
-            .parquet(os.path.join(wdir, "src"))
-            .writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(wdir, "ckpt"))
-            .foreachBatch(lambda df, _bid: df.write.format("noop").mode("overwrite").save())
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        shutil.rmtree(wdir, ignore_errors=True)
+    warm_up(spark, args.sf_dir)
 
     out: dict[str, float] = {}
     for name in args.names:

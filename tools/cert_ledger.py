@@ -1,19 +1,11 @@
 """Certification ledger: for every registry query, the LATEST round
 whose driver gate (CORRECTNESS_r0N.json) recorded it hash-green.
 
-This is the input to the round-9+ window policy committed in
-plans/queries.py: once round 8's window closed the certification
-endgame (every entry certified at least once), each later round's
-50-slot window holds the round's NEW queries, then any certified query
-whose code CHANGED since its last driver row (the changed-code lane),
-then the entries with the OLDEST last-certification — re-certifying
-the stalest driver signal first, so certification age stays bounded
-across the registry.
-
-Tracking the LATEST green round (not the first) is what makes this a
-rotation: the round-9 verdict found that a first-certification ledger
-re-picks the same 50 entries forever because re-certified entries keep
-their original age (VERDICT.md r9, defect 1).
+It lists the stalest certifications, the names used to refresh
+``plans/registry.DRIVER_WINDOW`` (the 50 entries the driver gate
+checks first), so re-certification reaches the oldest driver signal
+first. Tracking the latest green round, not the first, keeps the list
+rotating: a re-certified entry drops to the back.
 
 Usage: python tools/cert_ledger.py [N]
 Prints the N (default 50) stalest entries, oldest first, then a
@@ -55,12 +47,8 @@ def last_certified() -> dict[str, int]:
 
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 50
-    from job_datapipeline_spark.plans.queries import (
-        REGISTRY,
-        ensure_registry_order,
-    )
+    from job_datapipeline_spark.plans.queries import REGISTRY
 
-    ensure_registry_order()
     ledger = last_certified()
     aged = sorted(REGISTRY, key=lambda q: (ledger.get(q, 0), q))
     print(f"# {n} stalest certifications (oldest first):")
