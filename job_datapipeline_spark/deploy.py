@@ -17,7 +17,9 @@ entry point (pytest, bench, a foreign-cwd driver) gets a working stage.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import zipfile
 
@@ -33,9 +35,10 @@ def ensure_shipped(spark: SparkSession) -> None:
         return
     pkg_root = os.path.dirname(os.path.abspath(__file__))
     repo_root = os.path.dirname(pkg_root)
-    zpath = os.path.join(
-        tempfile.mkdtemp(prefix="jdp_pyfiles_"), "job_datapipeline_spark.zip"
-    )
+    zdir = tempfile.mkdtemp(prefix="jdp_pyfiles_")
+    # the context reads the zip until it stops, so it goes at interpreter exit
+    atexit.register(shutil.rmtree, zdir, True)
+    zpath = os.path.join(zdir, "job_datapipeline_spark.zip")
     with zipfile.ZipFile(zpath, "w") as z:
         for root, _dirs, files in os.walk(pkg_root):
             for f in sorted(files):

@@ -51,17 +51,13 @@ def write_partitioned_parquet(
     """
     if stamp_run_date:
         df = df.withColumn("run_date", F.date_format(F.current_date(), "yyyy-MM-dd"))
+    w = df.write
     if mode == "overwrite_partitions":
-        spark = df.sparkSession
-        conf_key = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(conf_key, "static")
-        spark.conf.set(conf_key, "dynamic")
-        try:
-            df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-        finally:
-            spark.conf.set(conf_key, prev)
-        return
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+        # a per-write option: the session conf, shared with concurrent
+        # writers in the same session, is never touched
+        w = w.option("partitionOverwriteMode", "dynamic")
+        mode = "overwrite"
+    w.mode(mode).partitionBy(*partition_cols).parquet(path)
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -216,8 +216,9 @@ def foreachbatch_partition_upsert(
     """The production serving-table maintenance pattern: foreachBatch +
     dynamic partition overwrite. Each micro-batch recomputes the rollups
     for ONLY the partitions it touches and overwrites exactly those
-    directories (spark.sql.sources.partitionOverwriteMode=dynamic), so a
-    replayed batch (failure/retry) converges to the same state —
+    directories (the per-write ``partitionOverwriteMode=dynamic`` option; the
+    session conf is left as it is), so a replayed batch (failure/retry)
+    converges to the same state —
     idempotent at the partition level, the MERGE-less upsert for plain
     parquet. The checkpoint gives each batch an id; Spark guarantees
     foreachBatch sees every batch at least once, and the overwrite makes
@@ -236,17 +237,12 @@ def foreachbatch_partition_upsert(
     full."""
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                batch_df.write.mode("overwrite")
-                .partitionBy(partition_col)
-                .parquet(target_dir)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        (
+            batch_df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(partition_col)
+            .parquet(target_dir)
+        )
 
     q = (
         stream.writeStream.trigger(availableNow=True)

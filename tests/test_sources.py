@@ -88,6 +88,25 @@ def test_kv_sink_batches_per_partition(spark, tmp_path):
     assert {it["job_id"] for it in items} == {f"id{i}" for i in range(57)}
 
 
+def test_ensure_shipped_leaves_no_temp_dir(tmp_path):
+    """The package zip lives until interpreter exit, then its dir goes."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = (
+        "import os, types\n"
+        "from job_datapipeline_spark.deploy import ensure_shipped\n"
+        "added = []\n"
+        "ensure_shipped(types.SimpleNamespace(sparkContext=types.SimpleNamespace(addPyFile=added.append)))\n"
+        "assert len(added) == 1 and os.path.getsize(added[0]) > 0\n"
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path), PYTHONPATH=repo)
+    subprocess.run([sys.executable, "-c", child], env=env, check=True, timeout=120)
+    assert [p.name for p in tmp_path.iterdir() if p.name.startswith("jdp_pyfiles_")] == []
+
+
 def test_json_side_input_skills(spark, tmp_path):
     path = str(tmp_path / "skills.json")
     with open(path, "w") as f:
@@ -113,6 +132,8 @@ def test_object_store_confs_shape():
 def test_overwrite_partitions_is_idempotent_per_day(spark, tmp_path):
     from job_datapipeline_spark.sources.sinks import write_partitioned_parquet
 
+    conf_key = "spark.sql.sources.partitionOverwriteMode"
+    conf_before = spark.conf.get(conf_key)
     path = str(tmp_path / "daily")
     d1 = spark.createDataFrame([(1, "2024-05-01"), (2, "2024-05-01")], "v long, run_date string")
     d2 = spark.createDataFrame([(3, "2024-05-02")], "v long, run_date string")
@@ -130,8 +151,9 @@ def test_overwrite_partitions_is_idempotent_per_day(spark, tmp_path):
     # a second identical re-run changes nothing (idempotent retry)
     write_partitioned_parquet(d2_fixed, path, ("run_date",), mode="overwrite_partitions")
     assert {(r["v"], str(r["run_date"])) for r in spark.read.parquet(path).collect()} == got
-    # and the session conf is restored
-    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "static"
+    # and the session conf is never touched (Spark spells its static default
+    # "STATIC"; the writer-level option leaves it as it was)
+    assert spark.conf.get(conf_key) == conf_before and conf_before.lower() == "static"
 
 
 def test_jsonl_sink_roundtrip(spark, tmp_path):

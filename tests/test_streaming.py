@@ -95,6 +95,22 @@ def test_dedup_stream_drops_watermarked_duplicates(spark, sf_dir, tmp_path):
     assert spark.read.parquet(out).count() == 200
 
 
+def test_upsert_batch_replaces_only_its_partitions(spark, tmp_path):
+    """The dynamic overwrite is a per-write option: with the session conf
+    at ``static``, an upsert batch carrying hour 2 leaves hour 1 alone."""
+    conf_key = "spark.sql.sources.partitionOverwriteMode"
+    conf_before = spark.conf.get(conf_key)
+    assert conf_before.lower() == "static"
+    target, src = str(tmp_path / "target"), str(tmp_path / "src")
+    spark.createDataFrame([(1, 1), (2, 2)], "v long, h long").write.partitionBy("h").parquet(target)
+    spark.createDataFrame([(20, 2), (21, 2)], "v long, h long").write.parquet(src)
+    stream = spark.readStream.schema("v long, h long").parquet(src)
+    P.foreachbatch_partition_upsert(stream, target, str(tmp_path / "ckpt"), partition_col="h")
+    got = {(r["v"], r["h"]) for r in spark.read.parquet(target).collect()}
+    assert got == {(1, 1), (20, 2), (21, 2)}
+    assert spark.conf.get(conf_key) == conf_before
+
+
 def test_stateful_sessionize_merges_across_batches(spark, sf_dir, tmp_path):
     """applyInPandasWithState continuity proof: events split into two
     TIME-ORDERED files fed one-per-micro-batch; sessions spanning the file
