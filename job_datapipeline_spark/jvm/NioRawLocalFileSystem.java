@@ -6,18 +6,26 @@ import java.nio.file.attribute.PosixFilePermission;
 import java.util.EnumSet;
 import java.util.Set;
 
+import org.apache.hadoop.fs.FileStatus;
 import org.apache.hadoop.fs.Path;
 import org.apache.hadoop.fs.RawLocalFileSystem;
 import org.apache.hadoop.fs.permission.FsPermission;
 
 /**
- * RawLocalFileSystem whose setPermission sets plain rwx modes in-process.
+ * RawLocalFileSystem whose setPermission and getFileLinkStatus run
+ * in-process.
  *
  * <p>Without libhadoop, the stock class forks a {@code chmod} process for
  * every file and directory it creates. The mode it sets (umask already
  * applied by the caller) is the same either way; a mode with a bit beyond
  * rwx, or a filesystem without POSIX attributes, still goes to the stock
  * path.
+ *
+ * <p>The stock getFileLinkStatus (every {@code FileContext} rename asks it)
+ * forks a {@code readlink} on {@code path.toString()}. For a path that is
+ * not a symbolic link that fork finds no target and the answer is plain
+ * {@code getFileStatus}; one {@code lstat} tells that case apart, and a
+ * symlink still goes to the stock path.
  */
 public class NioRawLocalFileSystem extends RawLocalFileSystem {
   private static final PosixFilePermission[] BITS = {
@@ -46,5 +54,13 @@ public class NioRawLocalFileSystem extends RawLocalFileSystem {
     } catch (UnsupportedOperationException e) {
       super.setPermission(p, permission);
     }
+  }
+
+  @Override
+  public FileStatus getFileLinkStatus(Path f) throws IOException {
+    if (Files.isSymbolicLink(pathToFile(f).toPath())) {
+      return super.getFileLinkStatus(f);
+    }
+    return getFileStatus(f);
   }
 }

@@ -215,16 +215,23 @@ def lsh_join_state(
     is re-shingled here — both inputs are already banded, so a daily
     batch against a 100 TB corpus reads only the index, never the text.
 
-    The BATCH side is broadcast (guide §3.1): state grows without bound
-    while a batch is one arrival's bands, so the hint keeps the planner
-    from ever shuffling the state side (a localCheckpointed batch frame
-    reports no size statistics, so the automatic threshold cannot be
-    relied on) — the state scan streams map-side against the O(batch)
-    hash relation.
+    The BATCH side is broadcast (guide §3.1) when the optimizer's size
+    estimate for it is within the session's ``autoBroadcastJoinThreshold``:
+    state grows without bound while a batch is one arrival's bands, so the
+    hint keeps the planner from shuffling the state side even when the
+    state looks smaller — the state scan streams map-side against the
+    O(batch) hash relation. A ``localCheckpoint``ed batch reports its size
+    like any other frame, and reading the estimate starts no job. A batch
+    over the threshold (or any batch, when the threshold is negative) gets
+    no hint and the planner picks the join, so an outsized arrival can
+    never force a driver-side hash relation.
     """
     a = state_bands.select(F.col(id_col).alias("id_a"), "band", "band_sig")
     b = batch_bands.select(F.col(id_col).alias("id_b"), "band", "band_sig")
-    return a.join(F.broadcast(b), ["band", "band_sig"]).select("id_a", "id_b").distinct()
+    limit = b.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if int(b._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()) <= limit:
+        b = F.broadcast(b)
+    return a.join(b, ["band", "band_sig"]).select("id_a", "id_b").distinct()
 
 
 def lsh_candidate_pairs(

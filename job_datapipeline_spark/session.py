@@ -13,9 +13,13 @@ scale from the start:
 - Under a ``local[...]`` master, ``file:`` paths go through the ``jvm/``
   shim (``NioLocalFileSystem`` / ``NioLocalFs``). Without libhadoop, which
   pyspark does not ship, stock Hadoop forks a ``chmod`` process for every
-  local file and directory it creates; the shim sets the same mode through
-  java.nio. Cluster executors would not have the class on their classpath,
-  and HDFS/S3 never shell out, so other masters keep the stock classes.
+  local file and directory it creates, and a ``readlink`` process for every
+  ``getFileLinkStatus`` (each ``FileContext`` rename: streaming offsets,
+  commits, state-store deltas). The shim sets the same mode through
+  java.nio, and answers link status for a path that is not a symlink with
+  one ``lstat``. Cluster executors would not have the class on their
+  classpath, and HDFS/S3 never shell out, so other masters keep the stock
+  classes.
 """
 
 from __future__ import annotations

@@ -1,20 +1,23 @@
 """The java.nio permission shim for ``file:`` paths (``job_datapipeline_spark/jvm``).
 
 Without libhadoop, stock ``RawLocalFileSystem.setPermission`` forks a
-``chmod`` process per local file and directory. The shim must fork none for
-plain rwx modes, and leave every mode, checksum file and conf choice as the
-stock classes would.
+``chmod`` process per local file and directory, and ``getFileLinkStatus``
+(asked on every ``FileContext`` rename) forks a ``readlink``. The shim must
+fork neither for plain rwx modes and non-link paths, and leave every mode,
+checksum file, link status and conf choice as the stock classes would.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 import textwrap
 
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from job_datapipeline_spark.session import local_fs_confs, local_fs_jar
 
@@ -60,15 +63,22 @@ _CHILD = textwrap.dedent(
 )
 
 
-def _chmods(tmp_path, extra_conf: dict[str, str]) -> tuple[list[str], list[str]]:
-    """``chmod`` calls a fresh driver process makes on paths under ``out``,
-    and on the ``sticky`` dir it sets to mode 1777."""
+# Every command Hadoop's ``Shell`` can fork on the local path: modes,
+# link targets, permission listings (``ls -ld``), ``Stat`` and disk usage.
+_FORKABLE = ("chmod", "readlink", "ls", "stat", "df", "du")
+
+
+def _forks(tmp_path, extra_conf: dict[str, str]) -> tuple[list[str], list[str]]:
+    """``<command> <args>`` lines for the ``_FORKABLE`` commands a fresh
+    driver process runs on paths under ``out``, and on the ``sticky`` dir it
+    sets to mode 1777."""
     bin_dir = tmp_path / "bin"
     bin_dir.mkdir()
-    log = tmp_path / "chmod.log"
-    shim = bin_dir / "chmod"
-    shim.write_text(f'#!/bin/sh\necho "$@" >> "{log}"\nexec /bin/chmod "$@"\n')
-    shim.chmod(0o755)
+    log = tmp_path / "forks.log"
+    for cmd in _FORKABLE:
+        shim = bin_dir / cmd
+        shim.write_text(f'#!/bin/sh\necho "{cmd} $*" >> "{log}"\nexec {shutil.which(cmd)} "$@"\n')
+        shim.chmod(0o755)
     out, sticky = tmp_path / "out", tmp_path / "sticky"
     sticky.mkdir()
     env = dict(
@@ -92,17 +102,19 @@ def _chmods(tmp_path, extra_conf: dict[str, str]) -> tuple[list[str], list[str]]
 
 @needs_jar
 def test_local_writes_fork_no_chmod(tmp_path):
-    under_out, on_sticky = _chmods(tmp_path, {})
+    under_out, on_sticky = _forks(tmp_path, {})
     assert under_out == []
     # a mode beyond rwx still takes the stock (forking) path
-    assert len(on_sticky) == 1 and "1777" in on_sticky[0]
+    assert len(on_sticky) == 1 and on_sticky[0].startswith("chmod ") and "1777" in on_sticky[0]
 
 
 @needs_jar
 def test_stock_local_writes_fork_chmod(tmp_path):
-    # control: the same driver with the stock classes forks one per file/dir
-    under_out, _ = _chmods(tmp_path, STOCK)
-    assert len(under_out) > 0
+    # control: the same driver with the stock classes forks a chmod per
+    # file/dir and a readlink per FileContext rename
+    under_out, _ = _forks(tmp_path, STOCK)
+    forked = {ln.split(" ", 1)[0] for ln in under_out}
+    assert {"chmod", "readlink"} <= forked
 
 
 def _tree(root: str) -> dict[str, int]:
@@ -150,6 +162,56 @@ def test_shim_sets_stock_modes_and_crc_files(spark, tmp_path, api, umask):
     assert ours == stock
     if umask == "077":
         assert stock["a/b/f"] & 0o777 == 0o600 and stock["a/b"] & 0o777 == 0o700
+
+
+def _link_statuses(spark, impls: dict[str, str], paths: list[str], api: str) -> list[tuple | str]:
+    """``getFileLinkStatus`` of each path through ``api`` on ``impls``: the
+    status fields, or the Java exception's class name."""
+    jvm = spark._jvm
+    conf = jvm.org.apache.hadoop.conf.Configuration()
+    for k, v in impls.items():
+        conf.set(k.removeprefix("spark.hadoop."), v)
+    uri = jvm.java.net.URI("file:///")
+    if api == "FileSystem":
+        fs = jvm.org.apache.hadoop.fs.FileSystem.newInstance(uri, conf)
+    else:
+        fs = jvm.org.apache.hadoop.fs.FileContext.getFileContext(uri, conf)
+    got = []
+    for p in paths:
+        try:
+            st = fs.getFileLinkStatus(jvm.org.apache.hadoop.fs.Path(p))
+        except Py4JJavaError as e:
+            got.append(e.java_exception.getClass().getName())
+            continue
+        target = st.getSymlink().toString() if st.isSymlink() else None
+        got.append((st.isFile(), st.isDirectory(), st.isSymlink(), st.getLen(), st.getPath().toString(), target))
+    if api == "FileSystem":
+        fs.close()
+    return got
+
+
+@needs_jar
+@pytest.mark.parametrize("api", ["FileSystem", "FileContext"])
+@pytest.mark.parametrize("scheme", ["", "file:"])
+def test_shim_returns_stock_link_status(spark, tmp_path, api, scheme):
+    """A regular file, a directory, a missing path, a symlink to a file and
+    a dangling symlink. Stock Hadoop forks ``readlink`` on the path string:
+    it resolves a plain path's link, and never a ``file:`` one."""
+    (tmp_path / "f").write_bytes(b"0123456789")
+    (tmp_path / "d").mkdir()
+    os.symlink(tmp_path / "f", tmp_path / "link")
+    os.symlink(tmp_path / "gone", tmp_path / "dangling")
+    paths = [f"{scheme}{tmp_path / name}" for name in ("f", "d", "missing", "link", "dangling")]
+    shim = {k: v for k, v in local_fs_confs("local[2]").items() if k != "spark.driver.extraClassPath"}
+    stock = _link_statuses(spark, STOCK, paths, api)
+    assert _link_statuses(spark, shim, paths, api) == stock
+    fnf = "java.io.FileNotFoundException"
+    assert stock[0][:4] == (True, False, False, 10) and stock[1][:3] == (False, True, False)
+    assert stock[2] == fnf
+    if scheme:
+        assert stock[3][:4] == (True, False, False, 10) and stock[4] == fnf
+    else:
+        assert stock[3][2] and stock[3][5].endswith("/f") and stock[4][2]
 
 
 def test_non_local_master_gets_no_shim_confs():

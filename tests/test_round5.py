@@ -15,6 +15,7 @@ import os
 import tempfile
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from job_datapipeline_spark.catalog import table
@@ -27,7 +28,7 @@ from job_datapipeline_spark.plans.queries import (
     _NDD_RPB,
 )
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, jobs_in_group
 
 
 def _docs(spark):
@@ -409,6 +410,58 @@ def test_cc_perplexity_matches_pure_python(spark):
         for r in REGISTRY["corpus_cc_perplexity_buckets"].fn(spark, SF_SMOKE).collect()
     }
     assert got == expected
+
+
+def _physical_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("threshold", ["1024", "-1"])
+def test_lsh_join_state_broadcasts_no_batch_over_threshold(spark, threshold):
+    """A batch whose optimizer size estimate (a 1,000-row checkpointed
+    frame: ~20 KB) exceeds autoBroadcastJoinThreshold gets no broadcast
+    hint: the planner shuffles both sides instead of building the batch
+    into a hash relation."""
+
+    def bands(n):
+        return spark.range(n).select(
+            F.col("id").alias("doc_id"),
+            (F.col("id") % 4).cast("int").alias("band"),
+            F.col("id").cast("string").alias("band_sig"),
+        ).localCheckpoint()
+
+    state, batch = bands(2000), bands(1000)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    # the size estimate is read from the plan: no job
+    assert jobs_in_group(spark, "lsh-join-plan", lambda: D.lsh_join_state(state, batch)) == []
+    try:
+        assert "BroadcastHashJoin" in _physical_plan(D.lsh_join_state(state, batch))
+        spark.conf.set(key, threshold)
+        plan = _physical_plan(D.lsh_join_state(state, batch))
+    finally:
+        spark.conf.set(key, old)
+    assert "BroadcastHashJoin" not in plan and "SortMergeJoin" in plan
+
+
+@pytest.mark.parametrize("name", ["dedup_state_roundtrip", "streaming_dedup_state_ingest"])
+def test_lsh_join_state_consumers_build_the_batch_side(spark, monkeypatch, name):
+    """Both registry consumers still broadcast the batch bands (the join's
+    right side) against the persisted state at sf0.01."""
+    plans = []
+    probe = D.lsh_join_state
+
+    def recording(state_bands, batch_bands, *args, **kwargs):
+        out = probe(state_bands, batch_bands, *args, **kwargs)
+        plans.append(_physical_plan(out))
+        return out
+
+    monkeypatch.setattr(D, "lsh_join_state", recording)
+    sf_small = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
+    assert REGISTRY[name].fn(spark, sf_small).count() > 0
+    assert plans
+    for plan in plans:
+        assert "BroadcastHashJoin" in plan and "BuildRight" in plan, plan
 
 
 # ---------------------------------------------------------------------------
