@@ -16,8 +16,8 @@ scrape -> clean -> aggregate -> serve), rebuilt Spark-first:
 
 Layout:
     session.py    SparkSession factory (AQE on, UTC, sane shuffle sizing)
-    schemas.py    explicit StructTypes (jobs table + testdata tables)
-    catalog.py    table loading / temp-view registration
+    schemas.py    explicit StructTypes of the testdata tables
+    catalog.py    table reads with the declared schemas
     functions/    column-expression libraries (cleaning, text incl. quality/
                   lang-ID/repetition/PII-redaction, vectors)
     operators/    composite DataFrame->DataFrame operators (topk, dedup incl.
@@ -27,7 +27,9 @@ Layout:
     sources/      readers/sinks (csv/parquet/kv/json) + html extraction
     streaming/    Structured Streaming pipelines + applyInPandasWithState
                   custom stateful operators over the events table
-    plans/        the named query registry (Spark fn + DuckDB oracle SQL)
+    plans/        the named query registry (Spark fn + DuckDB oracle SQL),
+                  one module per query family plus common.py (shared
+                  helpers) and registry.py
     deploy.py     ships the package to executor Python workers (addPyFile)
 """
 

@@ -1,4 +1,4 @@
-"""Table catalog: load the testdata star schema, register temp views.
+"""Table catalog: read the testdata star schema tables.
 
 Loads are plain ``spark.read.parquet`` scans with the declared schema —
 column pruning and filter pushdown then happen at the scan (Catalyst), which
@@ -17,8 +17,6 @@ from pyspark.sql.types import StructType
 from .schemas import TESTDATA_SCHEMAS
 
 TABLE_NAMES = tuple(TESTDATA_SCHEMAS)
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def _ensure_session_confs(spark: SparkSession) -> None:
@@ -65,13 +63,3 @@ def literal_dim(spark: SparkSession, rows, schema: str) -> DataFrame:
         for r in rows
     ]
     return spark.range(1).select(F.inline(F.array(*structs)))
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql use."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

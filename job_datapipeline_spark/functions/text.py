@@ -44,16 +44,6 @@ def word_ngrams(tokens: Column, n: int) -> Column:
                   ).otherwise(F.array().cast("array<string>"))
 
 
-def char_ngrams(text: Column, n: int) -> Column:
-    """Character n-grams of the lowercased text (lang-ID features)."""
-    s = F.lower(text)
-    count = F.greatest(F.length(s) - F.lit(n - 1), F.lit(0))
-    idx = F.sequence(F.lit(1), count)
-    return F.when(F.length(s) >= n,
-                  F.transform(idx, lambda i: F.substring(s, i, F.lit(n)))
-                  ).otherwise(F.array().cast("array<string>"))
-
-
 def fingerprint(text: Column) -> Column:
     """Document fingerprint: md5 of the normalized text (lowercase, collapsed
     whitespace). Identical-content detection that survives formatting noise.
@@ -75,25 +65,6 @@ def stopword_ratio(tokens: Column, stopwords: tuple[str, ...] = STOPWORDS_EN) ->
     hits = F.size(F.filter(tokens, lambda t: F.array_contains(sw, t)))
     n = F.size(tokens)
     return F.when(n > 0, hits.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
-
-
-def mean_word_length(tokens: Column) -> Column:
-    total = F.aggregate(tokens, F.lit(0), lambda acc, t: acc + F.length(t))
-    n = F.size(tokens)
-    return F.when(n > 0, total.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
-
-
-def quality_score(text: Column) -> Column:
-    """Composite [0,1] quality score: rewards reasonable length, penalizes
-    punctuation soup, rewards a natural stopword ratio. Deterministic,
-    expression-only — usable as a pushed-down filter at scan time."""
-    toks = tokenize(text)
-    n_tok = F.size(toks).cast("double")
-    len_score = F.least(n_tok / F.lit(50.0), F.lit(1.0))
-    punct_pen = F.lit(1.0) - F.least(punct_ratio(text) * 4.0, F.lit(1.0))
-    sw = stopword_ratio(toks)
-    sw_score = F.lit(1.0) - F.least(F.abs(sw - F.lit(0.3)) * 2.0, F.lit(1.0))
-    return F.round((len_score + punct_pen + sw_score) / 3.0, 4)
 
 
 # Tiny per-language stopword marker lists for the n-gram/stopword lang-ID

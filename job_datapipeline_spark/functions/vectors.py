@@ -31,10 +31,3 @@ def cosine(a: Column, b: Column) -> Column:
 def l2_distance(a: Column, b: Column) -> Column:
     diffs = F.zip_with(a, b, lambda x, y: (x.cast("double") - y.cast("double")))
     return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, d: acc + d * d))
-
-
-def l2_normalize(a: Column) -> Column:
-    n = norm(a)
-    return F.when(n > 0, F.transform(a, lambda x: x.cast("double") / n)).otherwise(
-        F.transform(a, lambda x: x.cast("double"))
-    )

@@ -436,7 +436,7 @@ def ivf_topk(
 
 # ---------------------------------------------------------------------------
 # Persistent IVF+PQ index — the faiss-IVFPQ layout actually STORED.
-# ann_ivf_pq_topk (plans/llm_round11b.py) certified the in-query
+# ann_ivf_pq_topk (plans/ann.py) certified the in-query
 # composition; the r11 scale ladder (SCALE_GROWTH.md "IVFPQ-vs-PQ
 # ladder") measured that at 100x scale the codes must live CELL-KEYED
 # NEXT TO the cell partitions (stored codes 2.5x over full ADC; a

@@ -1,7 +1,7 @@
 """Unigram-LM Viterbi segmentation device (SentencePiece, Kudo 2018,
 arXiv:1804.10959) — the JVM-side dp fold shared by tokenizer TRAINING
-(plans/llm_round9b.tokenizer_unigram_lm, where it is the E step) and
-ENCODE (plans/llm_round10f.tokenizer_unigram_encode, inference against
+(plans/text.tokenizer_unigram_lm, where it is the E step) and
+ENCODE (plans/text.tokenizer_unigram_encode, inference against
 a fixed vocabulary).
 
 The fold runs per word TYPE as ONE ``aggregate`` over the word's
@@ -9,9 +9,6 @@ positions — no Python boundary, no per-position shuffle; ties are fully
 pinned by the struct ordering (total cost ASC, piece count ASC,
 segmentation string ASC), which is what lets a DuckDB oracle that
 brute-forces every 2^(n-1) cut mask reproduce the argmin bit-exactly.
-
-Extracted from plans/llm_round9b in round 10 (sibling plan modules must
-not import each other through the registry's bottom-of-file chain).
 """
 
 from __future__ import annotations

@@ -6,84 +6,28 @@ order of the imports below, and then puts the driver window first. Python
 runs a package's ``__init__`` to its end before it returns any submodule,
 so a process that imports one plan module first (a Python worker
 unpickling a helper, say) still sees the whole registry in window order.
-A new plan module must be added to this list.
+
+There is one module per query family; the comments below list the
+query-name prefixes each holds. A new family module must be added to
+this list; a helper that two or more families use goes in ``common``,
+which registers nothing.
 """
 
-from . import queries  # noqa: F401  (the core families; REGISTRY, SKILLS_VOCAB)
-from . import llm_extras  # noqa: F401  (BM25 / temperature sampling / SemDeDup)
-from . import tpch_full  # noqa: F401  (registers the 13 remaining TPC-H shapes)
-from . import llm_round5  # noqa: F401  (domain cap / BPE pairs / DSIR / mix budget)
-from . import llm_round5b  # noqa: F401  (bloom / count-min / blocklist / mojibake / profiler / mean-pool)
-from . import llm_round5c  # noqa: F401  (RRF fusion / snapshot diff / join-size estimate / ORC sink / skyline)
-from . import llm_round5d  # noqa: F401  (PMI / curriculum / incremental MV / preference pairs / diversity / Gini)
-from . import llm_round5e  # noqa: F401  (interpolation / negative sampling / skew diagnosis / classification metrics / AUC)
-from . import llm_round5f  # noqa: F401  (CUSUM drift / triangles / bloom-prefilter join / market basket)
-from . import llm_round5g  # noqa: F401  (SCD2 apply / quality ablation / PSI drift)
-from . import llm_round5h  # noqa: F401  (calibration ECE / Markov transitions / RFM / cohort LTV)
-from . import llm_round5i  # noqa: F401  (DAU-WAU-MAU / ABC classes / native session windows / readability)
-from . import llm_round5j  # noqa: F401  (new-user growth / weighted median / purchase gaps / bot detection)
-from . import llm_round5k  # noqa: F401  (interval sweep / exact mode / SLO budget / seasonality index)
-from . import llm_round5l  # noqa: F401  (EWMA / Kaplan-Meier / OLS trend / Benford / Gram matrix)
-from . import llm_round5m  # noqa: F401  (A/B z-test / chi2 independence / affinity / sparse cosine / cascade delete)
-from . import llm_round5n  # noqa: F401  (grid NN geo join / KS test / Mann-Whitney / trimmed mean)
-from . import llm_round5o  # noqa: F401  (RAKE keyphrases / Z-order tiles / scan provenance / bin packing)
-from . import llm_round5p  # noqa: F401  (MMR diverse top-k / duplicate invoices / reorder rate)
-from . import llm_round5q  # noqa: F401  (Holt smoothing / k-core peel / Theil-Sen)
-from . import llm_round5r  # noqa: F401  (feature scaling / TWAP / aging buckets)
-from . import llm_round5s  # noqa: F401  (item-item CF / ABC-XYZ / seasonal anomalies)
-from . import llm_round5t  # noqa: F401  (matched cohort / star mart build / cycle time)
-from . import llm_round5u  # noqa: F401  (price waterfall / supplier scorecard / attribution models)
-from . import llm_round5v  # noqa: F401  (backfill planner / embedding isotropy / RLE paths)
-from . import llm_round5w  # noqa: F401  (bucketed-layout co-located join)
-from . import llm_round5x  # noqa: F401  (Gaussian-mixture EM / revenue bridge)
-from . import llm_round5y  # noqa: F401  (customer feature-store build)
-from . import llm_round5z  # noqa: F401  (forecast backtest / discount lift / Little's law)
-from . import llm_round5aa  # noqa: F401  (perceptual image dHash near-dedup)
-from . import llm_round5bb  # noqa: F401  (integer-Viterbi burst detection)
-from . import llm_round5cc  # noqa: F401  (SPC p-chart / difference-in-differences)
-from . import llm_round6  # noqa: F401  (Lorenz curve / length deciles / exact median-MAD / Heaps law / n-gram novelty)
-from . import llm_round6b  # noqa: F401  (Wilson CI / path trigrams / quarantine split)
-from . import llm_round6c  # noqa: F401  (PCA power iteration / BPE merge learning)
-from . import llm_round6d  # noqa: F401  (PR curve-AP / gains table / Neyman allocation / JSONL sink)
-from . import llm_round6e  # noqa: F401  (time-bound funnel / Poisson bootstrap CI / dow-hour heatmap)
-from . import llm_round6f  # noqa: F401  (char entropy / supplier HHI / Fano burstiness)
-from . import llm_round6g  # noqa: F401  (segment migration / Hill tail index)
-from . import llm_round6h  # noqa: F401  (winsorized mean)
-from . import llm_round7  # noqa: F401  (HLL-sketch DAU/WAU/MAU escalation)
-from . import llm_round7b  # noqa: F401  (retention triangle / CUPED / leakage-safe split / fuzzy blocking)
-from . import llm_round7c  # noqa: F401  (Misra-Gries mergeable heavy hitters)
-from . import llm_round7d  # noqa: F401  (Markov removal-effect attribution)
-from . import llm_round7e  # noqa: F401  (binned point-in-interval range join)
-from . import llm_round7f  # noqa: F401  (video scene-cut detection)
-from . import llm_round7g  # noqa: F401  (k-anonymity audit / binomial median CI)
-from . import llm_round7h  # noqa: F401  (streaming stream-static binned range join)
-from . import llm_round7i  # noqa: F401  (IPF raking corpus reweighting)
-from . import llm_round7j  # noqa: F401  (exact 1-D Wasserstein shift)
-from . import llm_round8a  # noqa: F401  (interval-overlap join family: overlaps / CIDR LPM / SCD2 PIT / FIFO)
-from . import llm_round8b  # noqa: F401  (layout: partition stats / range boundaries / dynamic partition pruning)
-from . import llm_round8c  # noqa: F401  (tokenizer_bpe_encode: distributed merge-table application)
-from . import llm_round8d  # noqa: F401  (graph_label_propagation: pinned synchronous LPA communities)
-from . import llm_round8e  # noqa: F401  (corpus_dedup_threshold_curve: one candidate pass, five thresholds)
-from . import llm_round8f  # noqa: F401  (sql_recursive_hierarchy: Spark 4.1 WITH RECURSIVE surface)
-from . import llm_round8g  # noqa: F401  (ml_uplift_qini: uplift-model evaluation curve)
-from . import llm_round8h  # noqa: F401  (dedup_lsh_tuning_curve: measured bands x rows S-curve)
-from . import llm_round8i  # noqa: F401  (geo_point_in_rect_join: 2-D grid containment, the geohash pattern)
-from . import llm_round8j  # noqa: F401  (multimodal_audio_vad: energy-threshold voice activity over WAV bytes)
-from . import llm_round9a  # noqa: F401  (corpus_decontaminate_semantic: cross-corpus SemDeDup-cell probe)
-from . import llm_round9b  # noqa: F401  (tokenizer_unigram_lm: SentencePiece-style EM-prune training)
-from . import llm_round9c  # noqa: F401  (corpus_epoch_upsample: epoch-capped repeat mixture)
-from . import llm_round9d  # noqa: F401  (corpus_decontaminate_coverage: method contingency table)
-from . import llm_round9e  # noqa: F401  (text_boilerplate_lines: corpus-frequency furniture filter)
-from . import llm_round10a  # noqa: F401  (ann_ivf_index_roundtrip: persistent IVF index write/append/probe)
-from . import llm_round10b  # noqa: F401  (streaming_ann_index_ingest: AvailableNow arrivals into the persisted IVF index)
-from . import llm_round10c  # noqa: F401  (ann_pq_adc_topk: product quantization, integer ADC lookup scan)
-from . import llm_round10d  # noqa: F401  (agg_kmv_theta_sketch_ops: mergeable distinct sketches with union/intersection)
-from . import llm_round10e  # noqa: F401  (embedding_matryoshka_overlap: prefix-dim truncation quality curve)
-from . import llm_round10f  # noqa: F401  (tokenizer_unigram_encode: fixed-vocab Viterbi inference + byte fallback)
-from . import llm_round11a  # noqa: F401  (ann_ivf_trained_index: Lloyd-trained quantizer -> persisted IVF -> probe)
-from . import llm_round11b  # noqa: F401  (ann_ivf_pq_topk: faiss-IVFPQ hybrid — cell-pruned integer ADC scan)
-from . import llm_round11c  # noqa: F401  (ann_filtered_topk: metadata-filtered vector search, pre- vs post-filter)
-from . import llm_round12  # noqa: F401  (ann_ivf_pq_index: cell-keyed stored PQ codes; ann_ivf_filtered_probe: predicate-pruned probe)
+# queries: pricing, revenue, argmax, join, window, top, topk, orderby, point,
+# setops, subquery, scalar, pivot, rollup, sql, observe, pareto, cleaner,
+# populator, scrape; it also exports REGISTRY and SKILLS_VOCAB
+from . import queries  # noqa: F401
+from . import tpch  # noqa: F401  (tpch)
+from . import agg  # noqa: F401  (agg, quality, compliance, audit)
+from . import events  # noqa: F401  (events, customer)
+from . import orders  # noqa: F401  (orders, supplier, part, compaction, mart, snapshot, scd2, mv, ops)
+from . import ml  # noqa: F401  (ml, recsys, causal, graph, geo)
+from . import corpus  # noqa: F401  (corpus)
+from . import text  # noqa: F401  (text, tokenizer)
+from . import dedup  # noqa: F401  (dedup)
+from . import ann  # noqa: F401  (ann, embedding)
+from . import streaming  # noqa: F401  (streaming)
+from . import formats  # noqa: F401  (sink, csv, html, xml, parquet, python, layout, multimodal)
 from .registry import apply_window
 
 apply_window()

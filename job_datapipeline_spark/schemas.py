@@ -24,50 +24,6 @@ def _f(name: str, dtype, nullable: bool = True) -> StructField:
     return StructField(name, dtype, nullable)
 
 
-# The scraped jobs fact table — 15 columns, all nullable, mirroring the
-# reference's StructType at glassdoor-scraper/src/main.py:125-139.
-JOBS_RAW = StructType(
-    [
-        _f("company_name", StringType()),
-        _f("company_rating", DoubleType()),
-        _f("company_offered_role", StringType()),
-        _f("company_role_location", StringType()),
-        _f("company_estimated_salary", StringType()),
-        _f("company_size", StringType()),
-        _f("company_industry", StringType()),
-        _f("company_sector", StringType()),
-        _f("company_founded", StringType()),
-        _f("company_type", StringType()),
-        _f("career_opportunities_rating", DoubleType()),
-        _f("comp_and_benefits_rating", DoubleType()),
-        _f("culture_and_values_rating", DoubleType()),
-        _f("senior_management_rating", DoubleType()),
-        _f("work_life_balance_rating", DoubleType()),
-    ]
-)
-
-# Cleaned jobs table = raw + the 6 derived columns the cleaner produces
-# (data-cleaner/cleaner.py:85-106): split-out rating, parsed size bounds,
-# normalized USD salary bounds, plus the filename-derived job_position.
-JOBS_CLEAN_EXTRA = StructType(
-    [
-        _f("job_position", StringType()),
-        _f("company_size_min", IntegerType()),
-        _f("company_size_max", IntegerType()),
-        _f("min_estimated_salary", IntegerType()),
-        _f("max_estimated_salary", IntegerType()),
-    ]
-)
-
-# Serving tables (data_populator/populator.py:47-58): Jobs(job_id, job) and
-# Top_10_skills(job_id, top_skill_n_1..top_skill_n_10).
-JOBS_KV = StructType([_f("job_id", StringType(), False), _f("job", StringType())])
-TOP_10_SKILLS = StructType(
-    [_f("job_id", StringType(), False)]
-    + [_f(f"top_skill_n_{i}", StringType()) for i in range(1, 11)]
-)
-
-
 # Driver testdata tables (/root/testdata/sf*/, TESTDATA.md). Parquet stores
 # naive timestamps -> TimestampNTZ so semantics match the DuckDB oracle.
 REGION = StructType([_f("r_regionkey", IntegerType()), _f("r_name", StringType())])

@@ -19,7 +19,7 @@ Spark-first re-expression:
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable, Iterator, Sequence
+from collections.abc import Callable, Iterator, Sequence
 
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
@@ -112,9 +112,3 @@ def kv_sink(
 
     ensure_shipped(df.sparkSession)
     df.foreachPartition(per_partition)
-
-
-def collect_kv_items(rows: Iterable[dict], key_col: str) -> dict[str, dict]:
-    """Small driver-side helper for tests/serving checks: index KV items by
-    key. Not a distributed path."""
-    return {r[key_col]: r for r in rows}

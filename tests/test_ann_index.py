@@ -12,8 +12,8 @@ from pyspark.sql import functions as F
 
 from job_datapipeline_spark.catalog import table
 from job_datapipeline_spark.operators import similarity
-from job_datapipeline_spark.plans.queries import _scratch_dir
-from job_datapipeline_spark.plans.r10_shared import R10_IVF_CENTS
+from job_datapipeline_spark.plans.common import IVF_CENTS as R10_IVF_CENTS
+from job_datapipeline_spark.plans.common import scratch_dir as _scratch_dir
 
 from conftest import SF_SMOKE, jobs_in_group
 

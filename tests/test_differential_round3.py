@@ -155,7 +155,7 @@ def test_funnel_report_matches_bruteforce(spark):
     match exactly."""
     import hashlib
 
-    from job_datapipeline_spark.plans.queries import (
+    from job_datapipeline_spark.plans.corpus import (
         _BENCH_FRACTION,
         _BENCH_SALT,
         _DECON_N,
@@ -239,12 +239,12 @@ def test_containment_pairs_match_bruteforce(spark):
     brute-force all-pairs python scan finds — guards the losslessness of
     the prefix and container-size filters (a too-short prefix or an
     off-by-one in ceil would silently drop qualifying pairs)."""
-    from job_datapipeline_spark.plans.queries import (
+    from job_datapipeline_spark.plans.dedup import (
         _CONTAIN_EXCERPT_TOKENS,
         _CONTAIN_MIN_TOKENS,
         _CONTAIN_THRESHOLD,
-        REGISTRY as _R,
     )
+    from job_datapipeline_spark.plans.queries import REGISTRY as _R
 
     docs = _rows(spark, "documents", ["doc_id", "text"])
     corpus = {}

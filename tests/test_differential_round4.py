@@ -33,11 +33,7 @@ def _md5(s: str) -> str:
 
 
 def test_bm25_matches_pure_python(spark):
-    from job_datapipeline_spark.plans.llm_extras import (
-        _BM25_B,
-        _BM25_K1,
-        _BM25_QUERIES,
-    )
+    from job_datapipeline_spark.plans.text import _BM25_B, _BM25_K1, _BM25_QUERIES
 
     docs = _docs(spark)
     tf = {d: Counter(_toks(t)) for d, _, t in docs if _toks(t)}
@@ -101,7 +97,10 @@ def test_temperature_sample_kept_set_matches_md5_replay(spark):
 
 
 def test_chunking_matches_pure_python(spark):
-    from job_datapipeline_spark.plans.llm_extras import _CHUNK_SIZE, _CHUNK_STRIDE
+    from job_datapipeline_spark.plans.common import (
+        CHUNK_SIZE as _CHUNK_SIZE,
+        CHUNK_STRIDE as _CHUNK_STRIDE,
+    )
 
     docs = _docs(spark)
     expected = {}
@@ -122,7 +121,7 @@ def test_chunking_matches_pure_python(spark):
 
 
 def test_upsample_repeat_emitted_multiset_matches_replay(spark):
-    from job_datapipeline_spark.plans.llm_extras import _EPOCHS
+    from job_datapipeline_spark.plans.corpus import _EPOCHS
 
     docs = _docs(spark)
     exp = defaultdict(lambda: [0, 0, 0])  # lang -> [n_docs, n_emitted, max]
@@ -187,10 +186,10 @@ def test_waiting_suppliers_matches_bruteforce(spark):
 
 
 def test_quality_classifier_scores_match_pure_python(spark):
-    from job_datapipeline_spark.plans.llm_extras import (
-        _QC_BIAS,
-        _QC_BUCKETS,
-        _QC_WEIGHTS,
+    from job_datapipeline_spark.plans.common import (
+        QC_BIAS as _QC_BIAS,
+        QC_BUCKETS as _QC_BUCKETS,
+        QC_WEIGHTS as _QC_WEIGHTS,
     )
 
     wgt = dict(_QC_WEIGHTS)
@@ -220,7 +219,10 @@ def test_quality_classifier_scores_match_pure_python(spark):
 
 
 def test_chunk_dedup_matches_pure_python(spark):
-    from job_datapipeline_spark.plans.llm_extras import _CHUNK_SIZE, _CHUNK_STRIDE
+    from job_datapipeline_spark.plans.common import (
+        CHUNK_SIZE as _CHUNK_SIZE,
+        CHUNK_STRIDE as _CHUNK_STRIDE,
+    )
 
     docs = _docs(spark)
     occurrences = []  # (doc_id, chunk_idx, hash)

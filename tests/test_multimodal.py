@@ -115,7 +115,7 @@ def _golden_hist(pixels):
 
 def test_bmp_decoder_golden_with_stride_padding():
     # width 3 -> row stride 12 (3 bytes padding): the decoder must honor it
-    from job_datapipeline_spark.plans.queries import _bmp_bytes, _bmp_pixel
+    from job_datapipeline_spark.plans.formats import _bmp_bytes, _bmp_pixel
 
     content = _bmp_bytes(3, 2)
     out = MM.bmp_image_decoder(content)
@@ -130,7 +130,7 @@ def test_bmp_decoder_rejects_non_bmp():
     assert MM.bmp_image_decoder(b"") is None
     assert MM.bmp_image_decoder(b"PNG not a bmp" * 10) is None
     # truncated pixel array
-    from job_datapipeline_spark.plans.queries import _bmp_bytes
+    from job_datapipeline_spark.plans.formats import _bmp_bytes
 
     content = _bmp_bytes(8, 8)
     assert MM.bmp_image_decoder(content[: len(content) - 10]) is None
@@ -152,7 +152,7 @@ def test_bmp_decoder_32bpp_topdown():
 
 
 def test_real_decoder_dispatch():
-    from job_datapipeline_spark.plans.queries import _bmp_bytes
+    from job_datapipeline_spark.plans.formats import _bmp_bytes
 
     assert MM.real_image_decoder(_bmp_bytes(4, 4))[2] == "bmp"
     fake = b"FAKEIMG\x00" + bytes([0, 4, 0, 2]) + bytes(range(8))
@@ -173,7 +173,7 @@ def test_pil_decoder_when_available():
 
 
 def test_wav_decoder_golden():
-    from job_datapipeline_spark.plans.queries import _wav_bytes, _wav_golden
+    from job_datapipeline_spark.plans.formats import _wav_bytes, _wav_golden
 
     content = _wav_bytes(1, 8000, 1600, 7)
     out = MM.wav_audio_decoder(content)
@@ -185,13 +185,13 @@ def test_wav_decoder_golden():
 
 
 def test_wav_decoder_stereo_and_rejects():
-    from job_datapipeline_spark.plans.queries import _wav_bytes
+    from job_datapipeline_spark.plans.formats import _wav_bytes
 
     out = MM.wav_audio_decoder(_wav_bytes(2, 16000, 100, 11))
     assert out is not None and out[0] == 2 and out[2] == 100
     assert MM.wav_audio_decoder(b"") is None
     assert MM.wav_audio_decoder(b"RIFFgarbage") is None
     # BMP bytes are not audio
-    from job_datapipeline_spark.plans.queries import _bmp_bytes
+    from job_datapipeline_spark.plans.formats import _bmp_bytes
 
     assert MM.wav_audio_decoder(_bmp_bytes(4, 4)) is None

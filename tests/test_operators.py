@@ -711,7 +711,8 @@ def test_kmeans_refinement_does_not_increase_objective(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from job_datapipeline_spark.functions.vectors import l2_distance
-    from job_datapipeline_spark.plans.queries import _IVF_CENT_IDS, REGISTRY
+    from job_datapipeline_spark.plans.ann import _IVF_CENT_IDS
+    from job_datapipeline_spark.plans.queries import REGISTRY
 
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents0 = emb.filter(F.col("vec_id").isin(*_IVF_CENT_IDS)).select(

@@ -1,10 +1,15 @@
 """Registry order: the driver window leads no matter which plan module a
-process imports first, and ``apply_window`` rejects a malformed window."""
+process imports first, and ``apply_window`` rejects a malformed window.
+Plan layout: one module per query family, and no plan module reaches into
+another's private names."""
 
 from __future__ import annotations
 
+import ast
+import glob
 import json
 import os
+import re
 import subprocess
 import sys
 
@@ -13,6 +18,7 @@ import pytest
 from job_datapipeline_spark.plans.registry import DRIVER_WINDOW, REGISTRY, apply_window
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PLANS = os.path.join(_REPO, "job_datapipeline_spark", "plans")
 
 
 def test_sibling_first_import_sees_window_order():
@@ -20,7 +26,7 @@ def test_sibling_first_import_sees_window_order():
     code = (
         "import json, sys\n"
         f"sys.path.insert(0, {_REPO!r})\n"
-        "import job_datapipeline_spark.plans.llm_round5l\n"
+        "import job_datapipeline_spark.plans.events\n"
         "from job_datapipeline_spark.plans import queries, registry\n"
         "print(json.dumps([list(queries.REGISTRY), list(registry.DRIVER_WINDOW)]))\n"
     )
@@ -46,3 +52,33 @@ def test_apply_window_rejects_malformed_window(window, message):
     with pytest.raises(AssertionError, match=message):
         apply_window(window)
     assert list(REGISTRY) == before
+
+
+def test_no_plan_module_is_named_by_round():
+    names = [os.path.basename(p)[:-3] for p in glob.glob(os.path.join(_PLANS, "*.py"))]
+    assert "queries" in names
+    by_round = [n for n in names if re.fullmatch(r"llm_round.*|r\d+_.*", n)]
+    assert by_round == []
+
+
+def test_no_private_imports_between_plan_modules():
+    plan_modules = {
+        os.path.basename(p)[:-3] for p in glob.glob(os.path.join(_PLANS, "*.py"))
+    }
+    assert "queries" in plan_modules
+    private = []
+    for path in sorted(glob.glob(os.path.join(_PLANS, "*.py"))):
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.ImportFrom)
+                and node.level == 1
+                and node.module in plan_modules
+            ):
+                private += [
+                    f"{os.path.basename(path)}: from .{node.module} import {a.name}"
+                    for a in node.names
+                    if a.name.startswith("_")
+                ]
+    assert private == []

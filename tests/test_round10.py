@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from job_datapipeline_spark.catalog import table
 from job_datapipeline_spark.operators.similarity import ivf_topk
-from job_datapipeline_spark.plans.r10_shared import R10_IVF_CENTS as _R10_IVF_CENTS
+from job_datapipeline_spark.plans.common import IVF_CENTS as _R10_IVF_CENTS
 from job_datapipeline_spark.plans.queries import REGISTRY
 
 from conftest import SF_SMOKE

@@ -11,9 +11,8 @@ from pyspark.sql import functions as F
 
 from job_datapipeline_spark.catalog import table
 from job_datapipeline_spark.operators.similarity import ivf_assign
-from job_datapipeline_spark.plans.llm_round8f import _child_session
-from job_datapipeline_spark.plans.llm_round10c import _PQ_CB_MAX
-from job_datapipeline_spark.plans.queries import REGISTRY
+from job_datapipeline_spark.plans.ann import _PQ_CB_MAX
+from job_datapipeline_spark.plans.queries import REGISTRY, _child_session
 
 from conftest import SF_SMOKE
 

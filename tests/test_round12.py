@@ -16,8 +16,9 @@ from job_datapipeline_spark.operators.similarity import (
     pq_encode,
     pq_subspace_struct,
 )
-from job_datapipeline_spark.plans.queries import REGISTRY, _scratch_dir
-from job_datapipeline_spark.plans.r10_shared import R10_IVF_CENTS
+from job_datapipeline_spark.plans.common import IVF_CENTS as R10_IVF_CENTS
+from job_datapipeline_spark.plans.common import scratch_dir as _scratch_dir
+from job_datapipeline_spark.plans.queries import REGISTRY
 
 from conftest import SF_SMOKE
 

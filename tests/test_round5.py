@@ -20,13 +20,13 @@ from pyspark.sql import functions as F
 
 from job_datapipeline_spark.catalog import table
 from job_datapipeline_spark.operators import dedup as D
-from job_datapipeline_spark.plans.queries import (
-    REGISTRY,
-    _INC_HIST_CAP,
-    _NDD_BANDS,
-    _NDD_HASHES,
-    _NDD_RPB,
+from job_datapipeline_spark.plans.common import (
+    NDD_BANDS as _NDD_BANDS,
+    NDD_HASHES as _NDD_HASHES,
+    NDD_RPB as _NDD_RPB,
 )
+from job_datapipeline_spark.plans.dedup import _INC_HIST_CAP
+from job_datapipeline_spark.plans.queries import REGISTRY
 
 from conftest import SF_SMOKE, jobs_in_group
 
@@ -53,7 +53,7 @@ def _round_half_away(x: float) -> int:
 # ---------------------------------------------------------------------------
 
 def test_domain_cap_matches_pure_python(spark):
-    from job_datapipeline_spark.plans.llm_round5 import _DOMCAP_K
+    from job_datapipeline_spark.plans.corpus import _DOMCAP_K
 
     docs = _docs(spark)
     by_source: dict[str, list] = {}
@@ -76,7 +76,7 @@ def test_domain_cap_matches_pure_python(spark):
 # ---------------------------------------------------------------------------
 
 def test_bpe_pairs_matches_pure_python(spark):
-    from job_datapipeline_spark.plans.llm_round5 import _BPE_TOPK
+    from job_datapipeline_spark.plans.text import _BPE_TOPK
 
     counts: Counter[str] = Counter()
     for _, lang, _s, _n, text in _docs(spark):
@@ -99,7 +99,7 @@ def test_bpe_pairs_matches_pure_python(spark):
 # ---------------------------------------------------------------------------
 
 def test_dsir_matches_pure_python(spark):
-    from job_datapipeline_spark.plans.llm_round5 import _DSIR_BUCKETS
+    from job_datapipeline_spark.plans.corpus import _DSIR_BUCKETS
 
     docs = _docs(spark)
     doc_buckets: dict[int, list[int]] = {}
@@ -140,7 +140,7 @@ def test_dsir_matches_pure_python(spark):
 # ---------------------------------------------------------------------------
 
 def test_mix_budget_matches_pure_python(spark):
-    from job_datapipeline_spark.plans.llm_round5 import (
+    from job_datapipeline_spark.plans.corpus import (
         _MIX_BUDGET_SHARE_PCT,
         _MIX_SALT,
         _MIX_WEIGHTS_PM,
@@ -276,7 +276,7 @@ def test_streaming_ingest_equals_oneshot_candidates(spark):
             )
         )
     )
-    from job_datapipeline_spark.plans.queries import _NDD_BANDS
+    from job_datapipeline_spark.plans.common import NDD_BANDS as _NDD_BANDS
     oneshot = {
         (r["id_a"], r["id_b"])
         for r in D.lsh_candidate_pairs(
@@ -302,11 +302,7 @@ def test_streaming_ingest_equals_oneshot_candidates(spark):
 def test_sq8_rerank_matches_pure_python(spark):
     import math
 
-    from job_datapipeline_spark.plans.llm_round5 import (
-        _SQ8_CAND,
-        _SQ8_NQ,
-        _SQ8_TOPK,
-    )
+    from job_datapipeline_spark.plans.ann import _SQ8_CAND, _SQ8_NQ, _SQ8_TOPK
 
     emb = {
         r["vec_id"]: list(r["embedding"])
@@ -367,7 +363,7 @@ def test_sq8_rerank_matches_pure_python(spark):
 def test_cc_perplexity_matches_pure_python(spark):
     import math
 
-    from job_datapipeline_spark.plans.llm_round5 import _CC_BUCKETS
+    from job_datapipeline_spark.plans.corpus import _CC_BUCKETS
 
     docs = _docs(spark)
     c = Counter()
@@ -469,7 +465,7 @@ def test_lsh_join_state_consumers_build_the_batch_side(spark, monkeypatch, name)
 # ---------------------------------------------------------------------------
 
 def test_vocab_coverage_matches_pure_python(spark):
-    from job_datapipeline_spark.plans.llm_round5 import _VOCAB_K
+    from job_datapipeline_spark.plans.text import _VOCAB_K
 
     docs = _docs(spark)
     freq = Counter()
@@ -518,7 +514,7 @@ def _merge_spans_py(starts: list[int], L: int) -> tuple[int, int]:
 
 
 def test_exact_substring_spans_matches_pure_python(spark):
-    from job_datapipeline_spark.plans.llm_round5 import _ESS_L
+    from job_datapipeline_spark.plans.dedup import _ESS_L
 
     docs = [(d, t.strip().lower().split()) for d, _l, _s, _n, t in _docs(spark)]
     gram_count = Counter()
@@ -548,11 +544,7 @@ def test_exact_substring_spans_matches_pure_python(spark):
 
 
 def test_span_corruption_matches_pure_python(spark):
-    from job_datapipeline_spark.plans.llm_round5 import (
-        _T5_SALT,
-        _T5_SPAN,
-        _T5_START_PM,
-    )
+    from job_datapipeline_spark.plans.corpus import _T5_SALT, _T5_SPAN, _T5_START_PM
 
     expected = {}
     for d, _l, _s, _n, text in _docs(spark):
@@ -584,7 +576,7 @@ def test_span_corruption_matches_pure_python(spark):
 def test_zipf_slope_matches_pure_python(spark):
     import math
 
-    from job_datapipeline_spark.plans.llm_round5 import _ZIPF_RANKS
+    from job_datapipeline_spark.plans.corpus import _ZIPF_RANKS
 
     freq: dict[str, Counter] = {}
     for _d, lang, _s, _n, text in _docs(spark):
@@ -619,7 +611,7 @@ def test_zipf_slope_matches_pure_python(spark):
 # ---------------------------------------------------------------------------
 
 def test_inverted_index_matches_pure_python(spark):
-    from job_datapipeline_spark.plans.llm_round5 import _INV_POSTINGS, _INV_TERMS
+    from job_datapipeline_spark.plans.text import _INV_POSTINGS, _INV_TERMS
 
     postings: dict[str, set] = {}
     for d, _l, _s, _n, text in _docs(spark):
@@ -642,7 +634,7 @@ def test_inverted_index_matches_pure_python(spark):
 # ---------------------------------------------------------------------------
 
 def test_cdc_chunk_match_matches_pure_python(spark):
-    from job_datapipeline_spark.plans.llm_round5 import _CDC_MOD, _CDC_SHIFT
+    from job_datapipeline_spark.plans.text import _CDC_MOD, _CDC_SHIFT
 
     def chunks_of(text: str) -> list[str]:
         toks = text.strip().lower().split()
@@ -687,8 +679,11 @@ def test_cdc_beats_fixed_stride_on_insertion(spark):
     """The reason CDC exists: the SAME planted 2-token insertion against
     the repo's fixed-stride chunker (text_chunk_overlap hashing) yields a
     near-zero chunk match rate, while CDC re-synchronizes."""
-    from job_datapipeline_spark.plans.llm_extras import _CHUNK_SIZE, _CHUNK_STRIDE
-    from job_datapipeline_spark.plans.llm_round5 import _CDC_SHIFT
+    from job_datapipeline_spark.plans.common import (
+        CHUNK_SIZE as _CHUNK_SIZE,
+        CHUNK_STRIDE as _CHUNK_STRIDE,
+    )
+    from job_datapipeline_spark.plans.text import _CDC_SHIFT
 
     def stride_chunks(text: str) -> list[str]:
         toks = text.strip().lower().split()
@@ -720,7 +715,7 @@ def test_cdc_beats_fixed_stride_on_insertion(spark):
 # ---------------------------------------------------------------------------
 
 def test_split_drift_matches_pure_python(spark):
-    from job_datapipeline_spark.plans.llm_round5 import _DRIFT_TOPK
+    from job_datapipeline_spark.plans.corpus import _DRIFT_TOPK
 
     a: Counter[str] = Counter()
     b: Counter[str] = Counter()

@@ -5,7 +5,7 @@ exact bitwise complement, and dhash_bits round-trips int64 signs)."""
 
 from __future__ import annotations
 
-from job_datapipeline_spark.plans.llm_round5aa import (
+from job_datapipeline_spark.plans.formats import (
     _DHASH_FIXTURES,
     _DHASH_NEAR,
     _bmp_bytes_for,

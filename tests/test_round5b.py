@@ -14,14 +14,14 @@ import math
 from collections import Counter
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.llm_round5b import (
-    _BLOCK_RULES,
+from job_datapipeline_spark.plans.agg import (
     _BLOOM_K,
-    _BLOOM_M,
     _CMS_D,
     _CMS_PROBE,
     _CMS_W,
 )
+from job_datapipeline_spark.plans.common import BLOOM_M as _BLOOM_M
+from job_datapipeline_spark.plans.corpus import _BLOCK_RULES
 from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE
@@ -50,7 +50,7 @@ def test_bloom_membership_matches_pure_python(spark):
     bits = {
         _hash_mod(str(k), j, _BLOOM_M) for k in build for j in range(_BLOOM_K)
     }
-    from job_datapipeline_spark.plans.llm_round5b import _BLOOM_NONMEMBER_OFFSET
+    from job_datapipeline_spark.plans.agg import _BLOOM_NONMEMBER_OFFSET
 
     custkeys = [
         r["c_custkey"] for r in table(spark, SF_SMOKE, "customer").collect()

@@ -9,10 +9,7 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.llm_round5bb import (
-    _BURST_GAMMA_MILLI,
-    _BURST_RATE_X,
-)
+from job_datapipeline_spark.plans.events import _BURST_GAMMA_MILLI, _BURST_RATE_X
 from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE

@@ -10,14 +10,10 @@ import math
 from collections import Counter
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.llm_round5d import (
-    _CURRICULUM_BUDGET,
-    _MV_ADD_OFFSET,
-    _PAIR_MARGIN_MICRO,
-    _PMI_MIN_PAIR,
-    _PMI_TOPK,
-)
+from job_datapipeline_spark.plans.corpus import _CURRICULUM_BUDGET, _PAIR_MARGIN_MICRO
+from job_datapipeline_spark.plans.orders import _MV_ADD_OFFSET
 from job_datapipeline_spark.plans.registry import REGISTRY
+from job_datapipeline_spark.plans.text import _PMI_MIN_PAIR, _PMI_TOPK
 
 from conftest import SF_SMOKE
 

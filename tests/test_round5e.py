@@ -12,14 +12,9 @@ import math
 from collections import Counter
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.llm_round5e import (
-    _CLS_LABEL_CHARS,
-    _CLS_SCORE_THRESHOLD,
-    _NEG_BUCKETS,
-    _NEG_K,
-    _NEG_SALT,
-    _SKEW_TOPK,
-)
+from job_datapipeline_spark.plans.corpus import _NEG_BUCKETS, _NEG_K, _NEG_SALT
+from job_datapipeline_spark.plans.ml import _CLS_LABEL_CHARS, _CLS_SCORE_THRESHOLD
+from job_datapipeline_spark.plans.queries import _SKEW_TOPK
 from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE

@@ -12,16 +12,13 @@ from collections import Counter, defaultdict
 from datetime import datetime
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.llm_round5f import (
-    _BASKET_MIN_SUPPORT,
-    _BASKET_TOPK,
+from job_datapipeline_spark.plans.events import (
     _CUSUM_STEP_FROM,
     _CUSUM_THRESH_DEN,
     _CUSUM_THRESH_NUM,
-    _PREF_K,
-    _PREF_M,
-    _PREF_SEGMENT,
 )
+from job_datapipeline_spark.plans.orders import _BASKET_MIN_SUPPORT, _BASKET_TOPK
+from job_datapipeline_spark.plans.queries import _PREF_K, _PREF_M, _PREF_SEGMENT
 from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE

@@ -10,11 +10,13 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.llm_round5g import (
+from job_datapipeline_spark.plans.corpus import (
     _ABL_ALPHA_MICRO,
     _ABL_MIN_CHARS,
     _ABL_MWL_HI,
     _ABL_MWL_LO,
+)
+from job_datapipeline_spark.plans.orders import (
     _SCD2_CHANGE,
     _SCD2_INSERT_OFFSET,
     _SCD2_OPEN,

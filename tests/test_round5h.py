@@ -10,10 +10,7 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.llm_round5h import (
-    _CAL_BUCKET_MICRO,
-    _CAL_LABEL_CHARS,
-)
+from job_datapipeline_spark.plans.ml import _CAL_BUCKET_MICRO, _CAL_LABEL_CHARS
 from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE

@@ -12,7 +12,7 @@ from collections import defaultdict
 from datetime import timedelta
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.llm_round5i import _SW_GAP_MIN
+from job_datapipeline_spark.plans.events import _SW_GAP_MIN
 from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE

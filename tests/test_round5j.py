@@ -10,7 +10,7 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.llm_round5j import (
+from job_datapipeline_spark.plans.events import (
     _BOT_CV2_DEN,
     _BOT_EVENTS,
     _BOT_MIN_GAPS,

@@ -10,7 +10,7 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.llm_round5k import _SLO_DEN, _SLO_NUM
+from job_datapipeline_spark.plans.events import _SLO_DEN, _SLO_NUM
 from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE

@@ -10,12 +10,9 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.llm_round5l import (
-    _BENFORD_MICRO,
-    _GRAM_DIMS,
-    _KM_HORIZON_WEEKS,
-    _KM_PACK,
-)
+from job_datapipeline_spark.plans.agg import _BENFORD_MICRO
+from job_datapipeline_spark.plans.ann import _GRAM_DIMS
+from job_datapipeline_spark.plans.orders import _KM_HORIZON_WEEKS, _KM_PACK
 from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE

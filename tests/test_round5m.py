@@ -11,13 +11,10 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.llm_round5m import (
-    _AB_Z_CRIT,
-    _COS_DF_PCT,
-    _COS_TOPK,
-    _DELETE_MOD,
-)
+from job_datapipeline_spark.plans.agg import _DELETE_MOD
+from job_datapipeline_spark.plans.events import _AB_Z_CRIT
 from job_datapipeline_spark.plans.registry import REGISTRY
+from job_datapipeline_spark.plans.text import _COS_DF_PCT, _COS_TOPK
 
 from conftest import SF_SMOKE
 

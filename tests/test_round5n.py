@@ -10,14 +10,14 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.llm_round5n import (
-    _GEO_CELL_DEG,
+from job_datapipeline_spark.plans.agg import (
     _KS_CRIT_MICRO2,
     _KS_G1,
     _KS_G2,
     _TRIM_PCT_DEN,
     _TRIM_PCT_NUM,
 )
+from job_datapipeline_spark.plans.ml import _GEO_CELL_DEG
 from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE

@@ -10,13 +10,10 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.llm_round5o import (
-    _PACK_CAP_X,
-    _PACK_FILL,
-    _RAKE_STOPWORDS,
-    _Z_TILE_SHIFT,
-)
+from job_datapipeline_spark.plans.formats import _Z_TILE_SHIFT
+from job_datapipeline_spark.plans.orders import _PACK_CAP_X, _PACK_FILL
 from job_datapipeline_spark.plans.registry import REGISTRY
+from job_datapipeline_spark.plans.text import _RAKE_STOPWORDS
 
 from conftest import SF_SMOKE
 

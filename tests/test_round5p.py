@@ -10,12 +10,8 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.llm_round5p import (
-    _DUPINV_BAND,
-    _DUPINV_WINDOW_DAYS,
-    _MMR_K,
-    _MMR_POOL,
-)
+from job_datapipeline_spark.plans.ann import _MMR_K, _MMR_POOL
+from job_datapipeline_spark.plans.orders import _DUPINV_BAND, _DUPINV_WINDOW_DAYS
 from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE

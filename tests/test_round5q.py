@@ -10,11 +10,8 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.llm_round5q import (
-    _HOLT_H,
-    _KCORE_K,
-    _KCORE_ROUNDS,
-)
+from job_datapipeline_spark.plans.events import _HOLT_H
+from job_datapipeline_spark.plans.ml import _KCORE_K, _KCORE_ROUNDS
 from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE

@@ -9,12 +9,8 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.llm_round5s import (
-    _ANOM_K,
-    _CF_HOT_CAP,
-    _CF_SAMPLE_MOD,
-    _CF_TOPK,
-)
+from job_datapipeline_spark.plans.ml import _CF_HOT_CAP, _CF_SAMPLE_MOD, _CF_TOPK
+from job_datapipeline_spark.plans.orders import _ANOM_K
 from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE

@@ -9,7 +9,7 @@ import math
 from collections import defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.llm_round5t import _TREATED_SEGMENT
+from job_datapipeline_spark.plans.ml import _TREATED_SEGMENT
 from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE

@@ -10,7 +10,7 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.llm_round5u import (
+from job_datapipeline_spark.plans.orders import (
     _SCORE_TOPK,
     _SCORE_W_REVENUE,
     _SCORE_W_SPEED,

@@ -10,10 +10,8 @@ import math
 from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.llm_round5v import (
-    _BACKFILL_SKIP_MOD,
-    _RLE_TOPK,
-)
+from job_datapipeline_spark.plans.events import _RLE_TOPK
+from job_datapipeline_spark.plans.orders import _BACKFILL_SKIP_MOD
 from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE

@@ -9,11 +9,8 @@ import math
 from collections import defaultdict
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.llm_round5x import (
-    _BRIDGE_Y1,
-    _BRIDGE_Y2,
-    _EM_ITERS,
-)
+from job_datapipeline_spark.plans.ml import _EM_ITERS
+from job_datapipeline_spark.plans.orders import _BRIDGE_Y1, _BRIDGE_Y2
 from job_datapipeline_spark.plans.registry import REGISTRY
 
 from conftest import SF_SMOKE

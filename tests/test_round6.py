@@ -11,10 +11,7 @@ import os
 import pandas as pd
 import pytest
 
-from job_datapipeline_spark.plans.llm_round5bb import (
-    _BURST_MAX_DAYS,
-    _capacity_guard,
-)
+from job_datapipeline_spark.plans.events import _BURST_MAX_DAYS, _capacity_guard
 from job_datapipeline_spark.testing import compare
 
 
@@ -74,9 +71,9 @@ def test_burst_viterbi_guard_passes_at_capacity(spark):
 def test_scratch_root_registered_for_atexit_cleanup():
     """_scratch_dir registers its per-pid root for interpreter-exit rmtree
     (a '/tmp reaper' is not guaranteed on Linux hosts)."""
-    from job_datapipeline_spark.plans import queries as q
+    from job_datapipeline_spark.plans import common as q
 
-    path = q._scratch_dir("round6_atexit_probe")
+    path = q.scratch_dir("round6_atexit_probe")
     assert os.path.isdir(path)
     root = os.path.dirname(path)
     assert root in q._SCRATCH_ROOTS

@@ -9,17 +9,9 @@ from collections import Counter, defaultdict
 
 from job_datapipeline_spark.catalog import table
 
-# queries must initialize BEFORE llm_round6c is imported directly: entering
-# the package through a plan module leaves it partially-initialized in
-# sys.modules while queries.py's trailing imports run, and the window
-# reorder then can't see its registrations
+from job_datapipeline_spark.plans.ann import _PCA_DIMS, _PCA_ITERS, _PCA_V0
 from job_datapipeline_spark.plans.queries import REGISTRY
-from job_datapipeline_spark.plans.llm_round6c import (  # noqa: E402
-    _BPE_ROUNDS,
-    _PCA_DIMS,
-    _PCA_ITERS,
-    _PCA_V0,
-)
+from job_datapipeline_spark.plans.text import _BPE_ROUNDS
 from job_datapipeline_spark.testing import single_partition_windows
 
 from conftest import SF_SMOKE

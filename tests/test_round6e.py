@@ -9,15 +9,15 @@ from collections import defaultdict
 from datetime import timedelta
 
 from job_datapipeline_spark.catalog import table
-from job_datapipeline_spark.plans.queries import REGISTRY
-from job_datapipeline_spark.plans.llm_round6e import (  # noqa: E402
+from job_datapipeline_spark.plans.agg import (
     _BOOT_B,
     _BOOT_HI_RANK,
     _BOOT_LO_RANK,
     _BOOT_SALT,
-    _FUNNEL_GAP_MIN,
     _POIS_T,
 )
+from job_datapipeline_spark.plans.events import _FUNNEL_GAP_MIN
+from job_datapipeline_spark.plans.queries import REGISTRY
 
 from conftest import SF_SMOKE
 

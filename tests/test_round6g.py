@@ -8,11 +8,8 @@ from collections import defaultdict
 from datetime import datetime
 
 from job_datapipeline_spark.catalog import table
+from job_datapipeline_spark.plans.events import _HILL_K, _MIG_SPLIT
 from job_datapipeline_spark.plans.queries import REGISTRY
-from job_datapipeline_spark.plans.llm_round6g import (  # noqa: E402
-    _HILL_K,
-    _MIG_SPLIT,
-)
 from job_datapipeline_spark.testing import single_partition_windows
 
 from conftest import SF_SMOKE

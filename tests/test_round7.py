@@ -22,11 +22,11 @@ def _force_sweep(q) -> None:
     # the sweep runs once per root registration; clearing the memo makes
     # the next _scratch_dir call re-run it
     q._SCRATCH_ROOTS.clear()
-    q._scratch_dir("round7_sweep_probe")
+    q.scratch_dir("round7_sweep_probe")
 
 
 def test_proc_start_ticks_parses_self():
-    from job_datapipeline_spark.plans import queries as q
+    from job_datapipeline_spark.plans import common as q
 
     ticks = q._proc_start_ticks(os.getpid())
     assert isinstance(ticks, int) and ticks > 0
@@ -39,7 +39,7 @@ def test_scratch_sweeps_recycled_pid_root():
     """A sibling root named for a LIVE pid whose recorded owner start
     time mismatches the pid's current start time is orphaned (the pid
     was recycled) and must be swept."""
-    from job_datapipeline_spark.plans import queries as q
+    from job_datapipeline_spark.plans import common as q
 
     sib = _sibling(1)  # pid 1 is always alive
     os.makedirs(sib, exist_ok=True)
@@ -54,7 +54,7 @@ def test_scratch_sweeps_recycled_pid_root():
 
 
 def test_scratch_leaves_live_owner_and_stampless_roots():
-    from job_datapipeline_spark.plans import queries as q
+    from job_datapipeline_spark.plans import common as q
 
     # a sibling with a MATCHING stamp is a live owner: leave it
     live = _sibling(1)
@@ -75,7 +75,7 @@ def test_scratch_leaves_live_owner_and_stampless_roots():
 
 
 def test_scratch_sweeps_dead_pid_root():
-    from job_datapipeline_spark.plans import queries as q
+    from job_datapipeline_spark.plans import common as q
 
     dead = _sibling(2**22 - 17)  # above default pid_max on most hosts
     os.makedirs(dead, exist_ok=True)

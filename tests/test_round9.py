@@ -6,7 +6,7 @@ multi-character pieces whose Viterbi scores beat the char baseline."""
 
 from __future__ import annotations
 
-from job_datapipeline_spark.plans.llm_round9a import _DECON_SEM_OFFSET
+from job_datapipeline_spark.plans.corpus import _DECON_SEM_OFFSET
 from job_datapipeline_spark.plans.queries import REGISTRY
 
 from conftest import SF_SMOKE

@@ -1,5 +1,5 @@
 """Property test for the unigram-LM Viterbi fold: on random words and
-random integer piece costs, the JVM-side dp (plans/llm_round9b._segment)
+random integer piece costs, the JVM-side dp (operators/unigram.segment_words)
 must return EXACTLY the brute-force argmin segmentation under the pinned
 (total cost, piece count, segmentation text) tie-break."""
 
@@ -11,7 +11,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from job_datapipeline_spark.plans.llm_round9b import _segment
+from job_datapipeline_spark.operators.unigram import segment_words as _segment
 
 _MAX_PIECE = 4
 
