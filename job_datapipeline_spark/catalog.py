@@ -8,11 +8,12 @@ columns.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, StructType
 
 from .schemas import TESTDATA_SCHEMAS
 
@@ -46,20 +47,25 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def literal_dim(spark: SparkSession, rows, schema: str) -> DataFrame:
     """A tiny literal dimension (config values, fixture rows, band tables)
-    as a PURE JVM plan: ``range(1)`` + ``inline`` of struct literals.
+    as a PURE JVM plan: one JSON string literal, ``from_json`` to an array
+    of structs of ``schema`` and ``inline``, over a one-row, one-partition
+    ``range``.
 
     ``spark.createDataFrame`` on local rows builds a Python-RDD scan whose
     every downstream job re-runs Python worker round-trips — measured 7s
     for a 12-row broadcast cross join on local[32]; this form runs in 0.2s
-    and broadcasts for free. Use for any dim small enough to inline into
-    the plan (config cross products, FX rates, test fixtures); real data
-    comes through ``table``/the sources layer.
+    and broadcasts for free. Building it is a fixed handful of py4j calls
+    whatever the row count (a literal per value would be several per
+    value). Python floats print as their shortest round-trip repr (NaN and
+    infinities as the bare tokens ``from_json`` accepts), so doubles come
+    back bit for bit. Every column is nullable. Use for any dim small
+    enough to inline into the plan (config cross products, FX rates, test
+    fixtures); real data comes through ``table``/the sources layer.
     """
     st = StructType.fromDDL(schema)
     if not rows:
         return spark.createDataFrame([], st)
-    structs = [
-        F.struct(*[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(r, st.fields)])
-        for r in rows
-    ]
-    return spark.range(1).select(F.inline(F.array(*structs)))
+    payload = json.dumps([dict(zip(st.names, r)) for r in rows])
+    return spark.range(0, 1, 1, 1).select(
+        F.inline(F.from_json(F.lit(payload), ArrayType(st)))
+    )

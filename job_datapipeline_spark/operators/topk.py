@@ -1,16 +1,17 @@
-"""Grouped top-k and rank->column pivot.
+"""Grouped top-k, as ranked rows or as one row of k columns per group.
 
 Re-expresses the populator's per-job ``Counter.most_common(10)`` + pivoted
-DynamoDB rows (data_populator/populator.py:39-58) as window + pivot.
+DynamoDB rows (data_populator/populator.py:39-58): ``top_k_per_group`` is a
+window ``row_number``, ``top_k_pivot`` one sorted-list aggregate.
 
 Semantic fix over the reference (SURVEY.md §2.5 W1): ``most_common`` breaks
 ties by insertion order, which is nondeterministic under parallelism. Here
 ties always break by the value column ascending, so the result is stable
 across partitionings and engines.
 
-Scale shape: window top-k is a single shuffle on the group key with partial
-aggregation before it; no driver-side loop over groups (the reference
-iterates distinct groups in Python — that dies at 100 TB).
+Scale shape: either form is a single shuffle on the group key; no
+driver-side loop over groups (the reference iterates distinct groups in
+Python — that dies at 100 TB).
 """
 
 from __future__ import annotations
@@ -44,26 +45,33 @@ def top_k_per_group(
     )
 
 
-def rank_pivot(
+def top_k_pivot(
     df: DataFrame,
-    key_cols: Sequence[str],
-    rank_col: str,
+    group_cols: Sequence[str],
+    order_col: str,
     value_col: str,
     k: int,
-    col_prefix: str = "top_skill_n_",
 ) -> DataFrame:
-    """W2 (populator.py:55-58): pivot rank 1..k into columns
-    ``<prefix>1 .. <prefix>k`` holding the value at that rank.
+    """W2 (populator.py:55-58): per group, the values of the k rows with the
+    highest ``order_col`` as columns ``top_skill_n_1 .. top_skill_n_k``;
+    ties break by ``value_col`` ascending, the order of
+    :func:`top_k_per_group`.
 
-    Explicit pivot values (1..k) keep the schema static — no extra pass to
-    discover pivot columns, and the output schema is known at plan time.
+    One aggregate per group, ``slice(sort_array(collect_list(struct(-order,
+    value))), 1, k)``, instead of a window sort, a rank filter and a pivot
+    aggregate: one exchange on the group key and no sort. A group with fewer
+    than k rows gets NULL trailing columns (``get`` is NULL past the end).
+    The whole group's list is held in memory, so use it where the distinct
+    values per group are bounded (tokens of a fixed vocabulary);
+    ``order_col`` must be a non-null number, such as a count.
     """
-    pivoted = (
-        df.groupBy(*key_cols)
-        .pivot(rank_col, list(range(1, k + 1)))
-        .agg(F.first(value_col))
+    best = F.expr(
+        f"slice(sort_array(collect_list(named_struct("
+        f"'neg', -`{order_col}`, 'v', `{value_col}`))), 1, {k})"
     )
-    return pivoted.select(
-        *key_cols,
-        *[F.col(f"`{i}`").alias(f"{col_prefix}{i}") for i in range(1, k + 1)],
+    return (
+        df.groupBy(*group_cols)
+        .agg(best.alias("best"))
+        .selectExpr(*[f"`{c}`" for c in group_cols],
+                    *[f"get(best, {i}).v AS top_skill_n_{i + 1}" for i in range(k)])
     )

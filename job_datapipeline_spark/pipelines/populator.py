@@ -5,8 +5,12 @@ declarative plan producing the two serving tables:
     top_k_skills(job_id, top_skill_n_1 .. top_skill_n_k)
 
 The reference loops over distinct groups in driver Python with a Counter;
-here it is explode -> broadcast semi-join -> two-phase hash agg -> window
-top-k (deterministic ties) -> static pivot. One shuffle on the group key.
+here it is explode -> vocabulary filter -> two-phase hash agg on (group,
+token) -> one sorted-list aggregate per group giving the k columns
+(deterministic ties). Two shuffles: on (group, token) for the count and on
+the group for the top-k; the job key is computed after both. One
+evaluation runs 4 jobs: the vocabulary subquery, the two shuffle map
+stages and the result stage.
 
 Documented divergence (P3): the reference selects each group's rows by
 SUBSTRING containment — ``jobs[jobs.job_position.str.contains(job)]``
@@ -27,21 +31,30 @@ from pyspark.sql import functions as F
 from ..catalog import literal_dim
 from ..functions.cleaning import deterministic_job_id
 from ..functions.text import tokenize
-from ..operators.topk import rank_pivot, top_k_per_group
+from ..operators.topk import top_k_pivot
 
 
 def skills_dim(spark: SparkSession, skills: Sequence[str]) -> DataFrame:
     """The skills.json term list (data_populator/skills.json:1-16) as a
-    broadcastable single-column dim."""
+    single-column literal dim."""
     return literal_dim(spark, [(s.lower(),) for s in skills], "token string")
 
 
 def skill_counts(df: DataFrame, skills: DataFrame, group_col: str, text_col: str) -> DataFrame:
     """A2 + J6 (populator.py:42-44): tokenize, keep skill tokens, count per
-    (group, token). Map-side partial agg makes the explode cheap on the wire."""
+    (group, token). Map-side partial agg makes the explode cheap on the wire.
+
+    Skill tokens are kept by ``array_contains`` against the vocabulary,
+    collected once by a scalar subquery, not by a broadcast semi-join: a
+    broadcast hash relation on a string key holds a whole Tungsten page
+    per evaluation (the session's page size, 16-64 MB on a local session),
+    however few the terms, until the broadcast is cleaned up. The lookup
+    is a scan of the vocabulary, so ``skills`` must stay config-sized (the
+    reference's list has 64 terms)."""
     toks = df.select(F.col(group_col).alias("job"), F.explode(tokenize(F.col(text_col))).alias("token"))
+    vocab = skills.select(F.collect_set("token")).scalar()
     return (
-        toks.join(F.broadcast(skills), "token", "left_semi")
+        toks.filter(F.array_contains(vocab, F.col("token")))
         .groupBy("job", "token")
         .agg(F.count("*").alias("cnt"))
     )
@@ -57,8 +70,6 @@ def top_skills(
     """Produce (jobs_kv, top_k_skills) — the populator's end state
     (populator.py:47-58), with the W1 determinism fix (ties -> token asc)."""
     counts = skill_counts(df, skills, group_col, text_col)
-    ranked = top_k_per_group(counts, ["job"], "cnt", k, tiebreak_cols=["token"])
-    keyed = ranked.withColumn("job_id", deterministic_job_id(F.col("job")))
-    jobs_kv = keyed.select("job_id", "job").distinct()
-    pivoted = rank_pivot(keyed, ["job_id"], "rank", "token", k)
-    return jobs_kv, pivoted
+    top = top_k_pivot(counts, ["job"], "cnt", "token", k)
+    job_id = deterministic_job_id(F.col("job")).alias("job_id")
+    return top.select(job_id, "job"), top.select(job_id, "*").drop("job")

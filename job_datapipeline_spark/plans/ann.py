@@ -509,9 +509,9 @@ def ann_sq8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(label, dim) components, ONE partial-aggregated groupBy — "
         "shuffle volume is O(groups x dims), independent of vector "
         "count, because the map-side combine collapses each task to "
-        "its local per-(label, dim) sums. Float discipline (the "
-        "plans/queries.py header rule): each float32 component is "
-        "converted to integer MICRO-UNITS before summing, so the group "
+        "its local per-(label, dim) sums. Float discipline: each "
+        "float32 component is converted to integer MICRO-UNITS "
+        "before summing, so the group "
         "sum is an exact bigint on both engines regardless of "
         "accumulation order (float sums are order-dependent; integer "
         "sums commute), and the mean is floor(exact_sum / n) — "

@@ -37,7 +37,7 @@ from ..operators.ranks import global_cummin
 from ..operators.skew import detect_hot_keys as _detect_hot_keys
 from ..operators.skew import salted_join as _salted_join
 from ..operators.skew import salted_join_hotkeys as _salted_join_hotkeys
-from ..operators.topk import rank_pivot, top_k_per_group
+from ..operators.topk import top_k_per_group, top_k_pivot
 from ..pipelines.cleaner import clean_jobs as _clean_jobs
 from ..pipelines.cleaner import exchange_rates_dim as _rates_dim
 from ..pipelines.populator import skills_dim as _skills_dim
@@ -459,11 +459,7 @@ def top_skills_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         "serving-table shape, columns top_skill_n_1..10.",
 )
 def top_skills_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    counts = _doc_skill_counts(spark, sf_dir)
-    ranked = top_k_per_group(
-        counts, group_cols=["lang"], order_col="cnt", k=10, tiebreak_cols=["token"]
-    )
-    return rank_pivot(ranked, key_cols=["lang"], rank_col="rank", value_col="token", k=10)
+    return top_k_pivot(_doc_skill_counts(spark, sf_dir), ["lang"], "cnt", "token", k=10)
 
 
 # ---------------------------------------------------------------------------

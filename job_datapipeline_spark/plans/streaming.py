@@ -457,7 +457,7 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     doc="Ingest-time near-dup detection over PERSISTENT LSH state — the "
         "production composition of dedup_state_roundtrip with Structured "
         "Streaming: the planted corpus (base + exact copy + near copy per "
-        "doc, the _SQL_CORPUS convention) arrives as 3 hash-split files, "
+        "doc, the common.SQL_CORPUS convention) arrives as 3 hash-split files, "
         "a real AvailableNow file-source stream processes one file per "
         "micro-batch (maxFilesPerTrigger=1), and each foreachBatch (a) "
         "MinHash-bands ONLY its own batch, (b) self-joins those bands for "

@@ -1,4 +1,5 @@
-"""Unit tests for composite operators: top-k determinism, pivot shape,
+"""Unit tests for composite operators: top-k determinism, top-k pivot shape
+and its equivalence with window top-k + pivot,
 dedup (exact / minhash-LSH / jaccard / simhash / embedding), similarity
 (brute force vs LSH recall), vector math."""
 
@@ -6,12 +7,14 @@ from __future__ import annotations
 
 import math
 
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from job_datapipeline_spark.catalog import table
 from job_datapipeline_spark.functions.vectors import cosine, dot, l2_distance
 from job_datapipeline_spark.operators import dedup, similarity
-from job_datapipeline_spark.operators.topk import rank_pivot, top_k_per_group
+from job_datapipeline_spark.operators.topk import top_k_per_group, top_k_pivot
 
 
 def test_topk_deterministic_ties(spark):
@@ -25,15 +28,50 @@ def test_topk_deterministic_ties(spark):
         assert got == [("a", 1), ("b", 2)]
 
 
-def test_rank_pivot_shape(spark):
+def test_top_k_pivot_shape(spark):
     df = spark.createDataFrame(
-        [("g1", 1, "x"), ("g1", 2, "y"), ("g2", 1, "z")], "grp string, rank int, tok string"
+        [("g1", 3, "x"), ("g1", 2, "y"), ("g2", 1, "z")], "grp string, cnt int, tok string"
     )
-    out = rank_pivot(df, ["grp"], "rank", "tok", k=3)
+    out = top_k_pivot(df, ["grp"], "cnt", "tok", k=3)
     assert out.columns == ["grp", "top_skill_n_1", "top_skill_n_2", "top_skill_n_3"]
     rows = {r["grp"]: r for r in out.collect()}
     assert rows["g1"]["top_skill_n_1"] == "x" and rows["g1"]["top_skill_n_2"] == "y"
     assert rows["g2"]["top_skill_n_1"] == "z" and rows["g2"]["top_skill_n_3"] is None
+
+
+def _window_pivot(df, k):
+    """The reference form: window ``row_number`` top-k, then a pivot of rank
+    1..k into columns."""
+    ranked = top_k_per_group(df, ["grp"], "cnt", k, tiebreak_cols=["tok"])
+    pivoted = ranked.groupBy("grp").pivot("rank", list(range(1, k + 1))).agg(F.first("tok"))
+    return pivoted.select(
+        "grp", *[F.col(f"`{i}`").alias(f"top_skill_n_{i}") for i in range(1, k + 1)]
+    )
+
+
+_TOPK_ROW = st.tuples(
+    st.sampled_from(["g1", "g2", "g3", None]),
+    st.sampled_from(["a", "b", "B", "ab", "", "é", None]),
+    st.integers(1, 3),  # a narrow range: heavy count ties
+)
+
+
+@settings(max_examples=12, deadline=None)
+@given(rows=st.lists(_TOPK_ROW, min_size=1, max_size=24), k=st.integers(1, 6))
+@example(rows=[("g1", "b", 2), ("g1", "a", 2), ("g1", "c", 2), ("g2", "z", 1)], k=1)
+@example(rows=[("g1", "b", 2), ("g1", "a", 2), ("g2", "z", 1)], k=5)
+def test_top_k_pivot_matches_window_pivot(spark, rows, k):
+    """Ties break by token ascending (NULL first, as ``ORDER BY tok`` does);
+    a group with fewer than k tokens has NULL trailing columns, not an
+    index error."""
+    df = spark.createDataFrame(rows, "grp string, tok string, cnt int")
+
+    def key(r):
+        return (r[0] is not None, r[0])
+
+    got = sorted((tuple(r) for r in top_k_pivot(df, ["grp"], "cnt", "tok", k).collect()), key=key)
+    want = sorted((tuple(r) for r in _window_pivot(df, k).collect()), key=key)
+    assert got == want
 
 
 def test_exact_dedup_keeps_min_id(spark):
