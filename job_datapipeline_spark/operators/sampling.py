@@ -82,6 +82,53 @@ def stratified_sample_k(
     )
 
 
+def _thin_to_shares(
+    df: DataFrame,
+    cw: DataFrame,
+    group_col: str,
+    share_col: str,
+    key_col: str,
+    salt: str,
+) -> DataFrame:
+    """Downsample ``df`` to target shares without upsampling: keep group
+    g's rows with ``p_g = share_g * min_h(n_h / share_h) / n_g`` (capped
+    at 1). ``cw`` is the |groups|-row frame (group_col, share_col, _n,
+    _ratio = _n / share). Draws are md5(salt:key) widened to 8 hex chars
+    and compared against a per-group threshold computed in the plan."""
+    m = cw.agg(F.min("_ratio").alias("_m"))
+    probs = (
+        cw.crossJoin(F.broadcast(m))
+        .withColumn(
+            "_p",
+            F.least(
+                F.col(share_col) * F.col("_m") / F.col("_n").cast("double"),
+                F.lit(1.0),
+            ),
+        )
+        .withColumn(
+            "_thr",
+            F.when(F.col("_p") >= 1.0, F.lit("g")).otherwise(
+                F.lower(
+                    F.lpad(
+                        F.hex(F.floor(F.col("_p") * F.lit(4294967296.0)).cast("bigint")),
+                        8,
+                        "0",
+                    )
+                )
+            ),
+        )
+        .select(group_col, "_thr")
+    )
+    draw = F.substring(
+        F.md5(F.concat(F.lit(salt), F.lit(":"), F.col(key_col).cast("string"))), 1, 8
+    )
+    return (
+        df.join(F.broadcast(probs), group_col)
+        .filter(draw < F.col("_thr"))
+        .drop("_thr")
+    )
+
+
 def mixture_sample(
     df: DataFrame,
     group_col: str,
@@ -158,32 +205,7 @@ def mixture_sample(
         )
         .withColumn("_ratio", F.col("_n").cast("double") / F.col("_w"))
     )
-    m = cw.agg(F.min("_ratio").alias("_m"))
-    probs = (
-        cw.crossJoin(F.broadcast(m))
-        .withColumn("_p", F.least(F.col("_w") * F.col("_m") / F.col("_n").cast("double"), F.lit(1.0)))
-        .withColumn(
-            "_thr",
-            F.when(F.col("_p") >= 1.0, F.lit("g")).otherwise(
-                F.lower(
-                    F.lpad(
-                        F.hex(F.floor(F.col("_p") * F.lit(4294967296.0)).cast("bigint")),
-                        8,
-                        "0",
-                    )
-                )
-            ),
-        )
-        .select(group_col, "_thr")
-    )
-    draw = F.substring(
-        F.md5(F.concat(F.lit(salt), F.lit(":"), F.col(key_col).cast("string"))), 1, 8
-    )
-    return (
-        df.join(F.broadcast(probs), group_col)
-        .filter(draw < F.col("_thr"))
-        .drop("_thr")
-    )
+    return _thin_to_shares(df, cw, group_col, "_w", key_col, salt)
 
 
 def temperature_sample(
@@ -227,35 +249,7 @@ def temperature_sample(
     else:
         s = F.pow(nd, F.lit(float(alpha)))
     cw = counts.withColumn("_s", s).withColumn("_ratio", nd / F.col("_s"))
-    m = cw.agg(F.min("_ratio").alias("_m"))
-    probs = (
-        cw.crossJoin(F.broadcast(m))
-        .withColumn(
-            "_p",
-            F.least(F.col("_s") * F.col("_m") / F.col("_n").cast("double"), F.lit(1.0)),
-        )
-        .withColumn(
-            "_thr",
-            F.when(F.col("_p") >= 1.0, F.lit("g")).otherwise(
-                F.lower(
-                    F.lpad(
-                        F.hex(F.floor(F.col("_p") * F.lit(4294967296.0)).cast("bigint")),
-                        8,
-                        "0",
-                    )
-                )
-            ),
-        )
-        .select(group_col, "_thr")
-    )
-    draw = F.substring(
-        F.md5(F.concat(F.lit(salt), F.lit(":"), F.col(key_col).cast("string"))), 1, 8
-    )
-    return (
-        df.join(F.broadcast(probs), group_col)
-        .filter(draw < F.col("_thr"))
-        .drop("_thr")
-    )
+    return _thin_to_shares(df, cw, group_col, "_s", key_col, salt)
 
 
 def weighted_sample(

@@ -18,7 +18,7 @@ import os as _os
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
@@ -1932,6 +1932,24 @@ _KS_G2 = "5-LOW"
 _KS_CRIT_MICRO2 = 1_844_164  # (1.358)^2 * 1e6, two-sided alpha=0.05, pinned
 
 
+def _priority_cents(spark: SparkSession, sf_dir: str, other: Column) -> DataFrame:
+    """Per distinct order price in cents ``v`` over the two compared
+    priorities: d1, the _KS_G1 order count, and the ``other`` aggregate."""
+    return (
+        table(spark, sf_dir, "orders")
+        .filter(F.col("o_orderpriority").isin(_KS_G1, _KS_G2))
+        .groupBy(
+            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("v")
+        )
+        .agg(
+            F.sum(F.when(F.col("o_orderpriority") == _KS_G1, 1).otherwise(0))
+            .cast("bigint")
+            .alias("d1"),
+            other,
+        )
+    )
+
+
 @register(
     "agg_ks_test",
     oracle=f"""
@@ -1989,22 +2007,13 @@ _KS_CRIT_MICRO2 = 1_844_164  # (1.358)^2 * 1e6, two-sided alpha=0.05, pinned
         "error <= bucket width x density.",
 )
 def agg_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    vals = (
-        table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderpriority").isin(_KS_G1, _KS_G2))
-        .groupBy(
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("v")
-        )
-        .agg(
-            F.sum(F.when(F.col("o_orderpriority") == _KS_G1, 1).otherwise(0))
-            .cast("bigint")
-            .alias("d1"),
-            F.sum(F.when(F.col("o_orderpriority") == _KS_G2, 1).otherwise(0))
-            .cast("bigint")
-            .alias("d2"),
-        )
-        .localCheckpoint()  # feeds the cumsum AND the totals
-    )
+    vals = _priority_cents(
+        spark,
+        sf_dir,
+        F.sum(F.when(F.col("o_orderpriority") == _KS_G2, 1).otherwise(0))
+        .cast("bigint")
+        .alias("d2"),
+    ).localCheckpoint()  # feeds the cumsum AND the totals
     # Both ECDF running sums share one range shuffle + partitioned window
     # (operators/ranks.global_cumsum) — the value-domain frame is near
     # row cardinality (distinct cents), so the single-partition window
@@ -2107,19 +2116,7 @@ def agg_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "algebraic accumulators.",
 )
 def agg_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
-    vals = (
-        table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderpriority").isin(_KS_G1, _KS_G2))
-        .groupBy(
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("v")
-        )
-        .agg(
-            F.sum(F.when(F.col("o_orderpriority") == _KS_G1, 1).otherwise(0))
-            .cast("bigint")
-            .alias("d1"),
-            F.count("*").cast("bigint").alias("t"),
-        )
-    )
+    vals = _priority_cents(spark, sf_dir, F.count("*").cast("bigint").alias("t"))
     # Running tie-group rank offset via the two-pass distributed cumsum
     # (operators/ranks) — same near-row-cardinality value domain as KS.
     cum = global_cumsum(vals, ["v"], "t", out_col="_ct").select(

@@ -31,6 +31,7 @@ from ..operators.similarity import (
     ivf_pq_index_append,
     ivf_pq_index_probe,
     ivf_pq_index_write_frame,
+    l2sq_micro,
     pq_subspace_struct,
 )
 from ..operators.similarity import ivf_topk as _ivf_topk
@@ -45,6 +46,57 @@ from .common import (
     sql_bucket,
 )
 from .registry import register
+
+
+def _cos_unguarded(a, b):
+    """Cosine as dot / (norm * norm), no zero-norm guard (unlike
+    ``functions.vectors.cosine``): the form every ANN oracle here writes."""
+    return _dot_hof(a, b) / (_norm_hof(a) * _norm_hof(b))
+
+
+def _rerank_recall(emb, cand, qv, brute_pairs, k: int, qcol: str) -> DataFrame:
+    """Exact-cosine rerank of approximate candidates with an in-plan recall
+    flag — the tail shared by the SQ8 and PQ families.
+
+    ``cand`` (q_id, vec_id) joins the broadcast query frame ``qv`` (q_id,
+    ``qcol``); the top ``k`` by rounded cosine (ties by vec_id) carry
+    ``in_exact_topk`` against the brute-force exact top ``k`` over
+    ``brute_pairs`` (the corpus x query pairs, with embedding and ``qcol``).
+    Output: (q_id, vec_id, cos, rank, in_exact_topk)."""
+    exact = (
+        emb.join(F.broadcast(cand), "vec_id")  # cand is <= |Q| x CAND rows: never shuffle the corpus
+        .join(F.broadcast(qv), "q_id")
+        .select(
+            "q_id", "vec_id",
+            F.round(_cos_unguarded(F.col("embedding"), F.col(qcol)), 4).alias("cos"),
+        )
+    )
+    w_r = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
+    rer = (
+        exact.withColumn("rank", F.row_number().over(w_r).cast("bigint"))
+        .filter(F.col("rank") <= k)
+    )
+    brute = (
+        brute_pairs.select(
+            "q_id", "vec_id",
+            _cos_unguarded(F.col("embedding"), F.col(qcol)).alias("_c"),
+        )
+        .withColumn(
+            "r",
+            F.row_number().over(
+                Window.partitionBy("q_id").orderBy(F.desc("_c"), F.asc("vec_id"))
+            ),
+        )
+        .filter(F.col("r") <= k)
+        .select("q_id", "vec_id", F.lit(True).alias("_hit"))
+    )
+    return (
+        rer.join(F.broadcast(brute), ["q_id", "vec_id"], "left")
+        .select(
+            "q_id", "vec_id", "cos", "rank",
+            F.coalesce("_hit", F.lit(False)).alias("in_exact_topk"),
+        )
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -436,43 +488,10 @@ def ann_sq8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv"))
         .localCheckpoint()  # 5-row query frame, consumed by rerank AND brute verify
     )
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos = lambda a, b: dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))  # noqa: E731
-    exact = (
-        emb.join(F.broadcast(cand), "vec_id")  # cand is <= NQ*CAND rows: broadcast, never shuffle the corpus
-        .join(F.broadcast(qv), "q_id")
-        .select("q_id", "vec_id", F.round(cos(F.col("embedding"), F.col("qv")), 4).alias("cos"))
-    )
-    w_r = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    rer = (
-        exact.withColumn("rank", F.row_number().over(w_r).cast("bigint"))
-        .filter(F.col("rank") <= _SQ8_TOPK)
-    )
-    brute = (
-        emb.join(F.broadcast(qv), F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", cos(F.col("embedding"), F.col("qv")).alias("_c"))
-        .withColumn(
-            "r",
-            F.row_number().over(
-                Window.partitionBy("q_id").orderBy(F.desc("_c"), F.asc("vec_id"))
-            ),
-        )
-        .filter(F.col("r") <= _SQ8_TOPK)
-        .select("q_id", "vec_id", F.lit(True).alias("_hit"))
-    )
-    return (
-        rer.join(F.broadcast(brute), ["q_id", "vec_id"], "left")
-        .select(
-            "q_id",
-            "vec_id",
-            "cos",
-            "rank",
-            F.coalesce("_hit", F.lit(False)).alias("in_exact_topk"),
-        )
+    return _rerank_recall(
+        emb, cand, qv,
+        emb.join(F.broadcast(qv), F.col("vec_id") != F.col("q_id")),
+        _SQ8_TOPK, "qv",
     )
 
 
@@ -1306,6 +1325,54 @@ def _sql_l2sq_micro(a: str, b: str) -> str:
     )
 
 
+def _pq_encode_lut(emb, corpus, qv):
+    """The PQ half shared by ann_pq_adc_topk and ann_ivf_pq_topk.
+
+    The codebook is KS x M corpus-only sub-vectors (query residue
+    excluded — no quantizer leak), kilobytes, reused by encode AND LUT.
+    Encode is the nearest codebook entry per (vector, subspace) — a
+    min_by PARTIAL AGGREGATE (map-side combinable), deliberately not a
+    window. The per-query LUT holds M x KS integer distances — |Q| x 128
+    rows, broadcast. Returns (enc (vec_id, j, code), lut (q_id, j, c, dsq))."""
+    subspaces = pq_subspace_struct("embedding", _PQ_M, _PQ_SUB)
+    cb = (
+        emb.filter((F.col("vec_id") < _PQ_CB_MAX) & (F.col("vec_id") % 10 != 3))
+        .select(F.col("vec_id").alias("c"), F.inline(subspaces))
+        .withColumnRenamed("svec", "cvec")
+        .localCheckpoint()
+    )
+    enc = (
+        corpus.select("vec_id", F.inline(subspaces))
+        .join(F.broadcast(cb), "j")
+        .select(
+            "vec_id", "j", "c",
+            l2sq_micro(F.col("svec"), F.col("cvec")).alias("_d"),
+        )
+        .groupBy("vec_id", "j")
+        .agg(F.min_by("c", F.struct("_d", "c")).alias("code"))
+    )
+    qsub = qv.select(
+        "q_id", F.inline(pq_subspace_struct("qvec", _PQ_M, _PQ_SUB, "qsvec"))
+    )
+    lut = qsub.join(F.broadcast(cb), "j").select(
+        "q_id", "j", "c", l2sq_micro(F.col("qsvec"), F.col("cvec")).alias("dsq")
+    )
+    return enc, lut
+
+
+def _adc_candidates(scan, n: int) -> DataFrame:
+    """ADC scan: sum the LUT distances of the (q_id, vec_id, dsq) code/LUT
+    join ``scan`` into exact integer scores and keep the n lowest per
+    query (ties by vec_id) as (q_id, vec_id)."""
+    adc = scan.groupBy("q_id", "vec_id").agg(F.sum("dsq").alias("adc"))
+    w_a = Window.partitionBy("q_id").orderBy(F.asc("adc"), F.asc("vec_id"))
+    return (
+        adc.withColumn("r", F.row_number().over(w_a))
+        .filter(F.col("r") <= n)
+        .select("q_id", "vec_id")
+    )
+
+
 @register(
     "ann_pq_adc_topk",
     oracle=f"""
@@ -1420,111 +1487,15 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qvec"))
         .localCheckpoint()  # 10-row query frame: LUT, rerank, brute verify
     )
-
-    subspaces = F.array(*[
-        F.struct(
-            F.lit(j).alias("j"),
-            F.slice("embedding", j * _PQ_SUB + 1, _PQ_SUB).alias("svec"),
-        )
-        for j in range(_PQ_M)
-    ])
-    # codebook: KS x M sub-vectors — kilobytes, reused by encode AND LUT;
-    # corpus-only ids (query residue excluded — no quantizer leak)
-    cb = (
-        emb.filter((F.col("vec_id") < _PQ_CB_MAX) & (F.col("vec_id") % 10 != 3))
-        .select(F.col("vec_id").alias("c"), F.inline(subspaces))
-        .withColumnRenamed("svec", "cvec")
-        .localCheckpoint()
+    enc, lut = _pq_encode_lut(emb, corpus, qv)
+    # ADC scan: codes join the broadcast LUT
+    cand = _adc_candidates(
+        enc.join(F.broadcast(lut), (enc.j == lut.j) & (enc.code == lut.c)),
+        _PQ_CAND,
     )
-
-    def l2sq_micro(a, b):
-        diffs = F.zip_with(a, b, lambda x, y: x.cast("double") - y.cast("double"))
-        s = F.aggregate(diffs, F.lit(0.0), lambda acc, d: acc + d * d)
-        return F.round(s * 1_000_000.0, 0).cast("bigint")
-
-    # encode: nearest codebook entry per (vector, subspace) — a min_by
-    # PARTIAL AGGREGATE (map-side combinable), deliberately not a window
-    csub = corpus.select("vec_id", F.inline(subspaces))
-    enc = (
-        csub.join(F.broadcast(cb), "j")
-        .select(
-            "vec_id", "j", "c",
-            l2sq_micro(F.col("svec"), F.col("cvec")).alias("_d"),
-        )
-        .groupBy("vec_id", "j")
-        .agg(F.min_by("c", F.struct("_d", "c")).alias("code"))
-    )
-
-    # per-query LUT: M x KS integer distances — |Q| x 128 rows, broadcast
-    qsub = qv.select(
-        "q_id",
-        F.inline(F.array(*[
-            F.struct(
-                F.lit(j).alias("j"),
-                F.slice("qvec", j * _PQ_SUB + 1, _PQ_SUB).alias("qsvec"),
-            )
-            for j in range(_PQ_M)
-        ])),
-    )
-    lut = qsub.join(F.broadcast(cb), "j").select(
-        "q_id", "j", "c", l2sq_micro(F.col("qsvec"), F.col("cvec")).alias("dsq")
-    )
-
-    # ADC scan: codes join the broadcast LUT, exact integer sums
-    adc = (
-        enc.join(F.broadcast(lut), (enc.j == lut.j) & (enc.code == lut.c))
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("dsq").alias("adc"))
-    )
-    w_a = Window.partitionBy("q_id").orderBy(F.asc("adc"), F.asc("vec_id"))
-    cand = (
-        adc.withColumn("r", F.row_number().over(w_a))
-        .filter(F.col("r") <= _PQ_CAND)
-        .select("q_id", "vec_id")
-    )
-
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos = lambda a, b: dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))  # noqa: E731
-    exact = (
-        emb.join(F.broadcast(cand), "vec_id")
-        .join(F.broadcast(qv), "q_id")
-        .select(
-            "q_id", "vec_id",
-            F.round(cos(F.col("embedding"), F.col("qvec")), 4).alias("cos"),
-        )
-    )
-    w_r = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    rer = (
-        exact.withColumn("rank", F.row_number().over(w_r).cast("bigint"))
-        .filter(F.col("rank") <= _PQ_TOPK)
-    )
-    brute = (
-        corpus.join(F.broadcast(qv))
-        .select(
-            "q_id", "vec_id",
-            cos(F.col("embedding"), F.col("qvec")).alias("_c"),
-        )
-        .withColumn(
-            "r",
-            F.row_number().over(
-                Window.partitionBy("q_id").orderBy(F.desc("_c"), F.asc("vec_id"))
-            ),
-        )
-        .filter(F.col("r") <= _PQ_TOPK)
-        .select("q_id", "vec_id", F.lit(True).alias("_hit"))
-    )
-    return (
-        rer.join(F.broadcast(brute), ["q_id", "vec_id"], "left")
-        .select(
-            "q_id", "vec_id", "cos", "rank",
-            F.coalesce("_hit", F.lit(False)).alias("in_exact_topk"),
-        )
-        .orderBy("q_id", "rank")
-    )
+    return _rerank_recall(
+        emb, cand, qv, corpus.join(F.broadcast(qv)), _PQ_TOPK, "qvec"
+    ).orderBy("q_id", "rank")
 
 
 # MATRYOSHKA (prefix-dimension) truncation quality.
@@ -2071,48 +2042,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("q_id", "cell")
 
     # PQ half: corpus-only codebook, min_by encode, per-query integer LUT
-    subspaces = F.array(*[
-        F.struct(
-            F.lit(j).alias("j"),
-            F.slice("embedding", j * _PQ_SUB + 1, _PQ_SUB).alias("svec"),
-        )
-        for j in range(_PQ_M)
-    ])
-    cb = (
-        emb.filter((F.col("vec_id") < _PQ_CB_MAX) & (F.col("vec_id") % 10 != 3))
-        .select(F.col("vec_id").alias("c"), F.inline(subspaces))
-        .withColumnRenamed("svec", "cvec")
-        .localCheckpoint()
-    )
-
-    def l2sq_micro(a, b):
-        diffs = F.zip_with(a, b, lambda x, y: x.cast("double") - y.cast("double"))
-        s = F.aggregate(diffs, F.lit(0.0), lambda acc, d: acc + d * d)
-        return F.round(s * 1_000_000.0, 0).cast("bigint")
-
-    csub = corpus.select("vec_id", F.inline(subspaces))
-    enc = (
-        csub.join(F.broadcast(cb), "j")
-        .select(
-            "vec_id", "j", "c",
-            l2sq_micro(F.col("svec"), F.col("cvec")).alias("_d"),
-        )
-        .groupBy("vec_id", "j")
-        .agg(F.min_by("c", F.struct("_d", "c")).alias("code"))
-    )
-    qsub = qv.select(
-        "q_id",
-        F.inline(F.array(*[
-            F.struct(
-                F.lit(j).alias("j"),
-                F.slice("qvec", j * _PQ_SUB + 1, _PQ_SUB).alias("qsvec"),
-            )
-            for j in range(_PQ_M)
-        ])),
-    )
-    lut = qsub.join(F.broadcast(cb), "j").select(
-        "q_id", "j", "c", l2sq_micro(F.col("qsvec"), F.col("cvec")).alias("dsq")
-    )
+    enc, lut = _pq_encode_lut(emb, corpus, qv)
 
     # The hybrid join: codes restricted to the query's probed cells.
     # (q_id, cell) x LUT is a tiny broadcast (|Q| x nprobe x 128 rows);
@@ -2121,65 +2051,18 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # IS the partition-pruned scan of the roundtrip family.
     lutq = lut.join(F.broadcast(qa), "q_id")  # (q_id, j, c, dsq, cell)
     encc = enc.join(ca, "vec_id")  # (vec_id, j, code, cell)
-    adc = (
+    cand = _adc_candidates(
         encc.join(
             F.broadcast(lutq),
             (encc["cell"] == lutq["cell"])
             & (encc["j"] == lutq["j"])
             & (encc["code"] == lutq["c"]),
-        )
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("dsq").alias("adc"))
+        ),
+        _CAND,
     )
-    w_a = Window.partitionBy("q_id").orderBy(F.asc("adc"), F.asc("vec_id"))
-    cand = (
-        adc.withColumn("r", F.row_number().over(w_a))
-        .filter(F.col("r") <= _CAND)
-        .select("q_id", "vec_id")
-    )
-
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos = lambda a, b: dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))  # noqa: E731
-    exact = (
-        emb.join(F.broadcast(cand), "vec_id")
-        .join(F.broadcast(qv), "q_id")
-        .select(
-            "q_id", "vec_id",
-            F.round(cos(F.col("embedding"), F.col("qvec")), 4).alias("cos"),
-        )
-    )
-    w_r = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    rer = (
-        exact.withColumn("rank", F.row_number().over(w_r).cast("bigint"))
-        .filter(F.col("rank") <= _TOPK)
-    )
-    brute = (
-        corpus.join(F.broadcast(qv))
-        .select(
-            "q_id", "vec_id",
-            cos(F.col("embedding"), F.col("qvec")).alias("_c"),
-        )
-        .withColumn(
-            "r",
-            F.row_number().over(
-                Window.partitionBy("q_id").orderBy(F.desc("_c"), F.asc("vec_id"))
-            ),
-        )
-        .filter(F.col("r") <= _TOPK)
-        .select("q_id", "vec_id", F.lit(True).alias("_hit"))
-    )
-    return (
-        rer.join(F.broadcast(brute), ["q_id", "vec_id"], "left")
-        .select(
-            "q_id", "vec_id", "cos", "rank",
-            F.coalesce("_hit", F.lit(False)).alias("in_exact_topk"),
-        )
-        .orderBy("q_id", "rank")
-    )
+    return _rerank_recall(
+        emb, cand, qv, corpus.join(F.broadcast(qv)), _TOPK, "qvec"
+    ).orderBy("q_id", "rank")
 
 
 # FILTERED vector search — metadata predicate +
@@ -2207,6 +2090,23 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Each query's target label is data-derived ((q_id // 10) % 10, so the
 # 10 queries sweep all 10 labels).  Exact arithmetic: cosine rounded to
 # 4dp before ranking, ties by vec_id — bit-identical cross-engine.
+
+
+def _labeled_queries(emb) -> DataFrame:
+    """The 10 query vectors (q_id, qv) with their data-derived target label
+    ((q_id // 10) % 10), materialized: every consumer reads the tiny frame."""
+    return (
+        emb.filter((F.col("vec_id") % 10 == 3) & (F.col("vec_id") < 100))
+        .select(
+            F.col("vec_id").alias("q_id"),
+            F.col("embedding").alias("qv"),
+            ((F.col("vec_id") / 10).cast("long") % 10).cast("int").alias(
+                "target_label"
+            ),
+        )
+        .localCheckpoint()
+    )
+
 
 _SHORTLIST = 25
 
@@ -2303,26 +2203,10 @@ _COS = (
 def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
     corpus = emb.filter(F.col("vec_id") % 10 != 3)
-    qv = (
-        emb.filter((F.col("vec_id") % 10 == 3) & (F.col("vec_id") < 100))
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("qv"),
-            ((F.col("vec_id") / 10).cast("long") % 10).cast("int").alias(
-                "target_label"
-            ),
-        )
-        .localCheckpoint()  # 10 rows: pre-filter join, probe, verdict
-    )
+    qv = _labeled_queries(emb)  # 10 rows: pre-filter join, probe, verdict
 
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos = lambda a, b: F.round(  # noqa: E731
-        dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b))), 4
-    )
+    def cos(a, b):
+        return F.round(_cos_unguarded(a, b), 4)
 
     # PRE-FILTER: the label predicate IS the join condition — scoring
     # only ever touches matching vectors (the pushed-predicate scan).
@@ -2680,17 +2564,7 @@ def ann_ivf_pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_ivf_filtered_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
     corpus = emb.filter(F.col("vec_id") % 10 != 3)
-    qv = (
-        emb.filter((F.col("vec_id") % 10 == 3) & (F.col("vec_id") < 100))
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("qv"),
-            ((F.col("vec_id") / 10).cast("long") % 10).cast("int").alias(
-                "target_label"
-            ),
-        )
-        .localCheckpoint()  # 10 rows: assignment, probe join, exact baseline
-    )
+    qv = _labeled_queries(emb)  # 10 rows: assignment, probe join, exact baseline
     cents = emb.filter(F.col("vec_id").isin(*IVF_CENTS)).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cent")
     )
@@ -2734,11 +2608,7 @@ def ann_ivf_filtered_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # Exact filtered top-k (the labeled brute baseline of ann_filtered_topk)
-    dot_cos = F.round(
-        _dot_hof(F.col("embedding"), F.col("qv"))
-        / (_norm_hof(F.col("embedding")) * _norm_hof(F.col("qv"))),
-        4,
-    )
+    dot_cos = F.round(_cos_unguarded(F.col("embedding"), F.col("qv")), 4)
     w_e = Window.partitionBy("q_id").orderBy(F.desc("_cos"), F.asc("vec_id"))
     exact = (
         corpus.join(F.broadcast(qv), corpus["label"] == qv["target_label"])

@@ -19,7 +19,7 @@ import os.path as _os_path
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import literal_dim, table
 from ..functions import text as _T
 from ..functions.scale import fan_out
 from ..functions.text import tokenize
@@ -432,6 +432,47 @@ QC_BIAS = -0.35
 QC_WEIGHTS = [(b, round(((b * 37 + 11) % 97) / 97.0 - 0.5, 4)) for b in range(QC_BUCKETS)]
 
 
+def qc_doc_micros(spark: SparkSession, docs: DataFrame) -> DataFrame:
+    """The linear quality classifier's per-document logit, (doc_id,
+    micros): hashed bag-of-words buckets (md5-derived, engine-portable),
+    length-normalized counts dotted with the broadcast QC_WEIGHTS dim,
+    each per-bucket contribution rounded to integer micro-units before
+    the per-doc sum (order-independent).
+
+    One corpus pass: doclen is the per-doc SUM of bucket counts, not a
+    second explode of the token stream; feats feeds both consumers from
+    a localCheckpoint (no subplan CSE in Spark)."""
+    wdim = literal_dim(spark, QC_WEIGHTS, "bucket int, wgt double")
+    toks = docs.select("doc_id", F.explode(tokenize(F.col("text"))).alias("tok"))
+    bucket = (
+        F.conv(F.substring(F.md5(F.col("tok")), 1, 4), 16, 10).cast("int")
+        % QC_BUCKETS
+    )
+    feats = toks.groupBy("doc_id", bucket.alias("bucket")).agg(
+        F.count("*").alias("cnt")
+    ).localCheckpoint()
+    dl = feats.groupBy("doc_id").agg(F.sum("cnt").alias("dl"))
+    return (
+        feats.join(F.broadcast(wdim), "bucket")
+        .join(dl, "doc_id")
+        .groupBy("doc_id")
+        .agg(
+            F.sum(
+                F.round(F.col("wgt") * F.col("cnt") * 1000000.0 / F.col("dl")).cast(
+                    "bigint"
+                )
+            ).alias("micros")
+        )
+    )
+
+
+def qc_score() -> Column:
+    """Sigmoid quality score of a qc_doc_micros row, rounded to 4 dp."""
+    return F.round(
+        1.0 / (1.0 + F.exp(-(F.col("micros") / 1000000.0 + F.lit(QC_BIAS)))), 4
+    )
+
+
 CHUNK_SIZE = 32
 CHUNK_STRIDE = 24  # 8-token overlap between consecutive chunks
 
@@ -534,6 +575,53 @@ def cum_small(df: DataFrame, key_col: str, val_cols: list[str]) -> DataFrame:
 
 RW_HALF_US = 1_800_000_000  # +-30 min in microseconds
 RW_BIN_US = 3_600_000_000  # 1 h bins ~ the interval width
+
+
+def error_window_sides(spark: SparkSession, sf_dir: str):
+    """(errors, purchases) of the error-window range join, times in epoch
+    microseconds: each error event's +-RW_HALF_US window (err_id, user_id,
+    lo, hi), materialized because the join AND the zero-fill read it, and
+    the purchase points (p_id, user_id, t)."""
+    ev = table(spark, sf_dir, "events").select(
+        "event_id",
+        "user_id",
+        "event_type",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("t"),
+    )
+    errors = (
+        ev.where(F.col("event_type") == "error")
+        .select(
+            F.col("event_id").alias("err_id"),
+            "user_id",
+            (F.col("t") - RW_HALF_US).alias("lo"),
+            (F.col("t") + RW_HALF_US).alias("hi"),
+        )
+        .localCheckpoint()
+    )
+    purchases = ev.where(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("p_id"), "user_id", "t"
+    )
+    return errors, purchases
+
+
+def error_window_counts(errors: DataFrame, matches: DataFrame) -> DataFrame:
+    """Per error window: the matched purchase count (0 when none) and the
+    lowest matched p_id, from the (err_id, p_id) ``matches``."""
+    agg = matches.groupBy("err_id").agg(
+        F.count("*").cast("bigint").alias("n"),
+        F.min("p_id").cast("bigint").alias("mn"),
+    )
+    return (
+        errors.select("err_id", "user_id")
+        .join(agg, "err_id", "left")
+        .select(
+            "err_id",
+            "user_id",
+            F.coalesce(F.col("n"), F.lit(0)).cast("bigint").alias("n_purchases"),
+            F.col("mn").alias("first_purchase_id"),
+        )
+        .orderBy("err_id")
+    )
 
 
 # Quantizer ids: BASE-corpus vectors (none =3 or =7 mod 10, so neither

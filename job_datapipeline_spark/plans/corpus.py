@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import literal_dim, table
+from ..catalog import table
 from ..functions import text as _T
 from ..functions.text import fingerprint, tokenize
 from ..operators import decontam as _DC
@@ -45,6 +45,8 @@ from .common import (
     merge_fixed_spans,
     planted_corpus,
     planted_dedup_artifact,
+    qc_doc_micros,
+    qc_score,
     score_micro,
     sql_shingles,
 )
@@ -850,33 +852,10 @@ def corpus_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def corpus_pretrain_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").filter(F.trim(F.col("text")) != "")
     docs = docs.select("doc_id", "lang", "text").localCheckpoint()
-    wdim = literal_dim(spark, QC_WEIGHTS, "bucket int, wgt double")
-    toks = docs.select("doc_id", F.explode(tokenize(F.col("text"))).alias("tok"))
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("tok")), 1, 4), 16, 10).cast("int")
-        % QC_BUCKETS
-    )
-    feats = toks.groupBy("doc_id", bucket.alias("bucket")).agg(
-        F.count("*").alias("cnt")
-    ).localCheckpoint()
-    dl = feats.groupBy("doc_id").agg(F.sum("cnt").alias("dl"))
-    z = (
-        feats.join(F.broadcast(wdim), "bucket")
-        .join(dl, "doc_id")
-        .groupBy("doc_id")
-        .agg(
-            F.sum(
-                F.round(F.col("wgt") * F.col("cnt") * 1000000.0 / F.col("dl")).cast(
-                    "bigint"
-                )
-            ).alias("micros")
-        )
-    )
-    score = F.round(
-        1.0 / (1.0 + F.exp(-(F.col("micros") / 1000000.0 + F.lit(QC_BIAS)))), 4
-    )
     kept_docs = (
-        docs.join(z, "doc_id").filter(score >= 0.5).select("doc_id", "lang", "text")
+        docs.join(qc_doc_micros(spark, docs), "doc_id")
+        .filter(qc_score() >= 0.5)
+        .select("doc_id", "lang", "text")
     ).localCheckpoint()
     t = tokenize(F.col("text"))
     sized = kept_docs.select("doc_id", "lang", t.alias("t"), F.size(t).alias("n"))

@@ -207,6 +207,16 @@ def dedup_near_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus.join(drops, "doc_id", "left_anti").select("doc_id")
 
 
+def _planted_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, embedding) of the first 300 vectors plus an exact copy of
+    each at vec_id + 10000 — the planted near-dup corpus."""
+    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    base = emb.filter(F.col("vec_id") < 300)
+    return base.unionByName(
+        base.select((F.col("vec_id") + 10000).alias("vec_id"), "embedding")
+    )
+
+
 @register(
     "dedup_embedding_pairs",
     oracle="""
@@ -230,11 +240,7 @@ def dedup_near_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "collisions (see ann_lsh_topk / near_dedup).",
 )
 def dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    base = emb.filter(F.col("vec_id") < 300)
-    corpus = base.unionByName(
-        base.select((F.col("vec_id") + 10000).alias("vec_id"), "embedding")
-    )
+    corpus = _planted_embeddings(spark, sf_dir)
     return _D.embedding_near_dups(corpus, threshold=0.99)
 
 
@@ -265,11 +271,7 @@ def dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SQL. Candidates are bucket-local — nothing O(n^2).",
 )
 def dedup_embedding_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    base = emb.filter(F.col("vec_id") < 300)
-    corpus = base.unionByName(
-        base.select((F.col("vec_id") + 10000).alias("vec_id"), "embedding")
-    )
+    corpus = _planted_embeddings(spark, sf_dir)
     return _D.embedding_near_dedup(corpus, threshold=0.99).select("vec_id")
 
 
@@ -459,6 +461,35 @@ def dedup_edit_distance_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
 _INC_HIST_CAP = 250  # batch-vs-corpus demo: docs below this are "historical"
 
 
+def _hist_and_batch(spark: SparkSession, sf_dir: str):
+    """(hist, batch) of the batch-vs-corpus dedup demo: documents below
+    _INC_HIST_CAP are history; the batch is the rest plus planted exact
+    (every 7th) and near (every 11th, tail appended) copies of history.
+
+    hist feeds four consumers (both plant branches, the exact-dup dim,
+    the union corpus) and batch three (exact probe, union corpus, final
+    output) — lazily that is 15 documents scans (measured); materialize
+    each once. At scale these ARE two distinct stored tables anyway."""
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    hist = docs.filter(F.col("doc_id") < _INC_HIST_CAP).localCheckpoint()
+    batch = (
+        docs.filter(F.col("doc_id") >= _INC_HIST_CAP)
+        .unionByName(
+            hist.filter(F.col("doc_id") % 7 == 0).select(
+                (F.col("doc_id") + 10000).alias("doc_id"), "text"
+            )
+        )
+        .unionByName(
+            hist.filter(F.col("doc_id") % 11 == 0).select(
+                (F.col("doc_id") + 20000).alias("doc_id"),
+                F.concat(F.col("text"), F.lit(" zz inc tail")).alias("text"),
+            )
+        )
+        .localCheckpoint()
+    )
+    return hist, batch
+
+
 @register(
     "dedup_incremental_batch",
     oracle=f"""
@@ -517,27 +548,7 @@ _INC_HIST_CAP = 250  # batch-vs-corpus demo: docs below this are "historical"
         "corpus-side work to colliding buckets.",
 )
 def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    # hist feeds four consumers (both plant branches, the exact-dup dim,
-    # the union corpus) and batch three (exact probe, union corpus, final
-    # output) — lazily that is 15 documents scans (measured); materialize
-    # each once. At scale these ARE two distinct stored tables anyway.
-    hist = docs.filter(F.col("doc_id") < _INC_HIST_CAP).localCheckpoint()
-    batch = (
-        docs.filter(F.col("doc_id") >= _INC_HIST_CAP)
-        .unionByName(
-            hist.filter(F.col("doc_id") % 7 == 0).select(
-                (F.col("doc_id") + 10000).alias("doc_id"), "text"
-            )
-        )
-        .unionByName(
-            hist.filter(F.col("doc_id") % 11 == 0).select(
-                (F.col("doc_id") + 20000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" zz inc tail")).alias("text"),
-            )
-        )
-        .localCheckpoint()
-    )
+    hist, batch = _hist_and_batch(spark, sf_dir)
     exact_hits = (
         batch.select("doc_id", fingerprint(F.col("text")).alias("_fp"))
         .join(
@@ -623,23 +634,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "verbatim, every 11th with a tail edit) guarantee hits.",
 )
 def dedup_state_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    hist = docs.filter(F.col("doc_id") < _INC_HIST_CAP).localCheckpoint()
-    batch = (
-        docs.filter(F.col("doc_id") >= _INC_HIST_CAP)
-        .unionByName(
-            hist.filter(F.col("doc_id") % 7 == 0).select(
-                (F.col("doc_id") + 10000).alias("doc_id"), "text"
-            )
-        )
-        .unionByName(
-            hist.filter(F.col("doc_id") % 11 == 0).select(
-                (F.col("doc_id") + 20000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" zz inc tail")).alias("text"),
-            )
-        )
-        .localCheckpoint()
-    )
+    hist, batch = _hist_and_batch(spark, sf_dir)
     state_path = _os_path.join(scratch_dir("dedup_state_roundtrip"), "band_state")
 
     # RUN 1 (corpus ingest): build and persist the band index. Partitioned
@@ -981,11 +976,7 @@ _SEM_L2 = (
         "sqrt-n centroids bounding expected cell size.",
 )
 def dedup_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    base = emb.filter(F.col("vec_id") < 300)
-    corpus = base.unionByName(
-        base.select((F.col("vec_id") + 10000).alias("vec_id"), "embedding")
-    )
+    corpus = _planted_embeddings(spark, sf_dir)
     kept = semantic_prune(corpus, threshold=0.95)
     return kept.groupBy("cell").agg(F.count("*").alias("n_kept")).orderBy("cell")
 

@@ -23,6 +23,15 @@ from ..operators.ranks import exact_ntile, int_div
 from .registry import register
 
 
+def _daily_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, day, n): the events per type and calendar day."""
+    return (
+        table(spark, sf_dir, "events")
+        .groupBy("event_type", F.col("ts").cast("date").alias("day"))
+        .agg(F.count("*").cast("bigint").alias("n"))
+    )
+
+
 # ---------------------------------------------------------------------------
 # Streaming-equivalent batch shapes over events
 # ---------------------------------------------------------------------------
@@ -1464,11 +1473,7 @@ def events_error_rate_slo(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the heavy data crosses one exchange as (type, day, count).",
 )
 def events_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy("event_type", F.col("ts").cast("date").alias("day"))
-        .agg(F.count("*").cast("bigint").alias("n"))
-    )
+    daily = _daily_type_counts(spark, sf_dir)
     packed = daily.groupBy("event_type").agg(
         F.array_sort(F.collect_list(F.struct("day", "n"))).alias("l")
     )
@@ -1728,6 +1733,43 @@ def events_jaccard_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HOLT_H = 7  # forecast horizon in days
 
 
+def _holt_prefix_fold(daily: DataFrame):
+    """Holt (alpha = beta = 1/2) over every prefix of each event type's
+    day-sorted series. Returns ``expanded``, one row per (event_type, t)
+    with the (day, n) series ``meta``, and the fold column: the
+    [level, trend] state after the first t days."""
+    packed = daily.groupBy("event_type").agg(
+        F.array_sort(F.collect_list(F.struct("day", "n"))).alias("meta")
+    )
+    expanded = packed.select(
+        "event_type",
+        "meta",
+        F.explode(F.sequence(F.lit(1), F.size("meta"))).alias("t"),
+    )
+    # state is a 2-element [level, trend] ARRAY, not a struct: DuckDB's
+    # list_reduce updates struct-accumulator fields IN PLACE during
+    # struct_pack evaluation (the trend expression would see the already-
+    # overwritten level) — measured, and dodged by the array state, which
+    # both engines build fresh per step
+    steps = F.transform(
+        F.slice(F.col("meta"), F.lit(1), F.col("t")),
+        lambda s: F.array(s["n"].cast("double"), F.lit(0.0)),
+    )
+    first = F.element_at(steps, 1)
+    rest = F.slice(steps, F.lit(2), F.greatest(F.col("t") - 1, F.lit(0)))
+
+    def merge(acc, e):
+        lvl = F.element_at(acc, 1)
+        trd = F.element_at(acc, 2)
+        x = F.element_at(e, 1)
+        return F.array(
+            0.5 * x + 0.5 * (lvl + trd),
+            0.5 * ((0.5 * x + 0.5 * (lvl + trd)) - lvl) + 0.5 * trd,
+        )
+
+    return expanded, F.aggregate(rest, first, merge)
+
+
 @register(
     "events_holt_forecast",
     oracle=f"""
@@ -1787,42 +1829,8 @@ _HOLT_H = 7  # forecast horizon in days
         "only the calendar-bounded rollup.",
 )
 def events_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy("event_type", F.col("ts").cast("date").alias("day"))
-        .agg(F.count("*").cast("bigint").alias("n"))
-    )
-    packed = daily.groupBy("event_type").agg(
-        F.array_sort(F.collect_list(F.struct("day", "n"))).alias("meta")
-    )
-    expanded = packed.select(
-        "event_type",
-        "meta",
-        F.explode(F.sequence(F.lit(1), F.size("meta"))).alias("t"),
-    )
-    # state is a 2-element [level, trend] ARRAY, not a struct: DuckDB's
-    # list_reduce updates struct-accumulator fields IN PLACE during
-    # struct_pack evaluation (the trend expression would see the already-
-    # overwritten level) — measured, and dodged by the array state, which
-    # both engines build fresh per step
-    steps = F.transform(
-        F.slice(F.col("meta"), F.lit(1), F.col("t")),
-        lambda s: F.array(s["n"].cast("double"), F.lit(0.0)),
-    )
-    first = F.element_at(steps, 1)
-    rest = F.slice(steps, F.lit(2), F.greatest(F.col("t") - 1, F.lit(0)))
-
-    def merge(acc, e):
-        lvl = F.element_at(acc, 1)
-        trd = F.element_at(acc, 2)
-        x = F.element_at(e, 1)
-        new_l = 0.5 * x + 0.5 * (lvl + trd)
-        return F.array(
-            new_l,
-            0.5 * ((0.5 * x + 0.5 * (lvl + trd)) - lvl) + 0.5 * trd,
-        )
-
-    st = F.aggregate(rest, first, merge)
+    daily = _daily_type_counts(spark, sf_dir)
+    expanded, st = _holt_prefix_fold(daily)
     return expanded.select(
         "event_type",
         F.element_at("meta", F.col("t"))["day"].cast("string").alias("day"),
@@ -2234,37 +2242,9 @@ _BT_H = 7  # forecast horizon in days
         "of being a notebook afterthought.",
 )
 def events_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy("event_type", F.col("ts").cast("date").alias("day"))
-        .agg(F.count("*").cast("bigint").alias("n"))
-        .localCheckpoint()  # feeds the fold AND the actuals join
-    )
-    packed = daily.groupBy("event_type").agg(
-        F.array_sort(F.collect_list(F.struct("day", "n"))).alias("meta")
-    )
-    expanded = packed.select(
-        "event_type",
-        "meta",
-        F.explode(F.sequence(F.lit(1), F.size("meta"))).alias("t"),
-    )
-    steps = F.transform(
-        F.slice(F.col("meta"), F.lit(1), F.col("t")),
-        lambda s: F.array(s["n"].cast("double"), F.lit(0.0)),
-    )
-    first = F.element_at(steps, 1)
-    rest = F.slice(steps, F.lit(2), F.greatest(F.col("t") - 1, F.lit(0)))
-
-    def merge(acc, e):
-        lvl = F.element_at(acc, 1)
-        trd = F.element_at(acc, 2)
-        x = F.element_at(e, 1)
-        return F.array(
-            0.5 * x + 0.5 * (lvl + trd),
-            0.5 * ((0.5 * x + 0.5 * (lvl + trd)) - lvl) + 0.5 * trd,
-        )
-
-    st = F.aggregate(rest, first, merge)
+    # feeds the fold AND the actuals join
+    daily = _daily_type_counts(spark, sf_dir).localCheckpoint()
+    expanded, st = _holt_prefix_fold(daily)
     forecasts = expanded.select(
         "event_type",
         F.date_add(F.element_at("meta", F.col("t"))["day"], _BT_H).alias(
@@ -2460,12 +2440,8 @@ def _capacity_guard():
         "rate constants are one tiny aggregate joined back.",
 )
 def events_burst_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy("event_type", F.col("ts").cast("date").alias("day"))
-        .agg(F.count("*").cast("bigint").alias("n"))
-        .localCheckpoint()  # feeds the rates AND the fold
-    )
+    # feeds the rates AND the fold
+    daily = _daily_type_counts(spark, sf_dir).localCheckpoint()
     rates = daily.groupBy("event_type").agg(
         F.round(F.lit(1000.0) * F.sum("n") / F.count("*"))
         .cast("bigint")

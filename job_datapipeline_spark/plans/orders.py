@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import os as _os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
@@ -1072,6 +1072,54 @@ def orders_open_interval_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pass every demand model runs.
 
 
+def _daily_order_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(day, cents): exact order revenue in cents per order date."""
+    return (
+        table(spark, sf_dir, "orders")
+        .groupBy(F.col("o_orderdate").cast("date").alias("day"))
+        .agg(
+            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+            .cast("bigint")
+            .alias("cents")
+        )
+    )
+
+
+def _month_shares(daily: DataFrame) -> DataFrame:
+    """Per calendar month of ``daily`` (day, cents): revenue s_m and day
+    count d_m, with the all-month totals s_all and d_all on every row.
+    The 12-row month frame is materialized: it feeds the totals AND the
+    month rows."""
+    monthly = (
+        daily.groupBy(F.month("day").alias("cal_month"))
+        .agg(
+            F.sum("cents").cast("bigint").alias("s_m"),
+            F.count("*").alias("d_m"),
+        )
+        .localCheckpoint()
+    )
+    tot = monthly.agg(
+        F.sum("s_m").cast("bigint").alias("s_all"),
+        F.sum("d_m").cast("bigint").alias("d_all"),
+    )
+    return monthly.crossJoin(F.broadcast(tot))
+
+
+def _index_micro() -> Column:
+    """A month's seasonal index in micro-units over a _month_shares row:
+    its mean daily revenue over the all-month mean, (s_m / d_m) / (s_all
+    / d_all), as one rounded division of exact integer products."""
+    return (
+        F.round(
+            F.lit(1_000_000.0)
+            * (F.col("s_m") * F.col("d_all"))
+            / (F.col("d_m") * F.col("s_all"))
+        )
+        .cast("bigint")
+        .alias("index_micro")
+    )
+
+
 @register(
     "orders_seasonality_index",
     oracle="""
@@ -1115,40 +1163,13 @@ def orders_open_interval_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "totals broadcast back.",
 )
 def orders_seasonality_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = (
-        table(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
-    monthly = (
-        daily.groupBy(F.month("day").alias("cal_month"))
-        .agg(
-            F.sum("cents").cast("bigint").alias("s_m"),
-            F.count("*").alias("d_m"),
-        )
-        .localCheckpoint()  # feeds the totals AND the index rows
-    )
-    tot = monthly.agg(
-        F.sum("s_m").cast("bigint").alias("s_all"),
-        F.sum("d_m").cast("bigint").alias("d_all"),
-    )
     return (
-        monthly.crossJoin(F.broadcast(tot))
+        _month_shares(_daily_order_cents(spark, sf_dir))
         .select(
             F.col("cal_month").cast("bigint").alias("cal_month"),
             F.col("s_m").alias("revenue_cents"),
             F.col("d_m").cast("bigint").alias("n_days"),
-            F.round(
-                F.lit(1_000_000.0)
-                * (F.col("s_m") * F.col("d_all"))
-                / (F.col("d_m") * F.col("s_all"))
-            )
-            .cast("bigint")
-            .alias("index_micro"),
+            _index_micro(),
         )
         .orderBy("cal_month")
     )
@@ -1323,6 +1344,32 @@ def orders_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reported figure is one final rounded IEEE division.
 
 
+def _nation_monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(nation, x, y): whole-dollar order revenue per customer nation and
+    month index x (months since 1995-01). ``customer`` scales with the
+    input, so its join is left to the planner; ``nation`` is bounded."""
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    return (
+        o.join(c, o.o_custkey == c.c_custkey)
+        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .groupBy(
+            F.col("n_name").alias("nation"),
+            (
+                (F.year("o_orderdate") - 1995) * 12 + (F.month("o_orderdate") - 1)
+            )
+            .cast("bigint")
+            .alias("x"),
+        )
+        .agg(
+            F.sum(F.round(F.col("o_totalprice")).cast("bigint"))
+            .cast("bigint")
+            .alias("y")
+        )
+    )
+
+
 @register(
     "orders_trend_ols",
     oracle="""
@@ -1375,31 +1422,13 @@ def orders_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         "numerator subtracts two ~1e15 products; both sit under 2^53 "
         "so the double subtraction is still exact. The 100 TB shape: "
         "facts partial-aggregate map-side to the nation x month frame "
-        "(calendar-bounded), dims broadcast, and the power sums are "
+        "(calendar-bounded), nation broadcast (customer only while it fits "
+        "the broadcast threshold), and the power sums are "
         "algebraic (single-pass, mergeable) — the same five "
         "accumulators stream through any partitioning.",
 )
 def orders_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(spark, sf_dir, "orders")
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    monthly = (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            (
-                (F.year("o_orderdate") - 1995) * 12 + (F.month("o_orderdate") - 1)
-            )
-            .cast("bigint")
-            .alias("x"),
-        )
-        .agg(
-            F.sum(F.round(F.col("o_totalprice")).cast("bigint"))
-            .cast("bigint")
-            .alias("y")
-        )
-    )
+    monthly = _nation_monthly_revenue(spark, sf_dir)
     sums = monthly.groupBy("nation").agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("sx"),
@@ -1705,8 +1734,9 @@ def orders_duplicate_invoices(spark: SparkSession, sf_dir: str) -> DataFrame:
         "aggregate is the (part, customer) distinct-order count: a "
         "fact-to-fact join on the co-partitioned orderkey (the S10 "
         "bucketing layout) followed by one partial-aggregatable "
-        "groupBy; the brand rollup then joins the part DIM broadcast-"
-        "side and reduces counts with FILTER (both counts in the same "
+        "groupBy; the brand rollup then joins the part DIM (broadcast "
+        "while it fits the broadcast threshold) and reduces counts "
+        "with FILTER (both counts in the same "
         "pass) — one rounded division per brand at the very end. The "
         "100 TB shape: nothing driver-side, distinct-order counting "
         "collapses map-side within (part, cust) partitions, and the "
@@ -1722,8 +1752,9 @@ def part_reorder_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_partkey", "o_custkey")
         .agg(F.countDistinct("l_orderkey").cast("bigint").alias("n_orders"))
     )
+    # part scales with the input: no hint, the planner picks the join
     return (
-        pairs.join(F.broadcast(p), pairs.l_partkey == p.p_partkey)
+        pairs.join(p, pairs.l_partkey == p.p_partkey)
         .groupBy(F.col("p_brand").alias("brand"))
         .agg(
             F.count("*").cast("bigint").alias("n_pairs"),
@@ -1805,27 +1836,8 @@ def part_reorder_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "scale-INVARIANT; the rank window partitions per nation.",
 )
 def orders_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(spark, sf_dir, "orders")
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    monthly = (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            (
-                (F.year("o_orderdate") - 1995) * 12 + (F.month("o_orderdate") - 1)
-            )
-            .cast("bigint")
-            .alias("x"),
-        )
-        .agg(
-            F.sum(F.round(F.col("o_totalprice")).cast("bigint"))
-            .cast("bigint")
-            .alias("y")
-        )
-        .localCheckpoint()  # both sides of the pair self-join
-    )
+    # both sides of the pair self-join
+    monthly = _nation_monthly_revenue(spark, sf_dir).localCheckpoint()
     a = monthly.select("nation", F.col("x").alias("xa"), F.col("y").alias("ya"))
     b = monthly.select(
         F.col("nation").alias("nation_b"),
@@ -2222,38 +2234,9 @@ _ANOM_K = 3  # flag |residual - median| > K * MAD
         "any data size.",
 )
 def orders_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = (
-        table(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-        .localCheckpoint()  # feeds the index build AND the residual join
-    )
-    monthly = (
-        daily.groupBy(F.month("day").alias("cal_month"))
-        .agg(
-            F.sum("cents").cast("bigint").alias("s_m"),
-            F.count("*").alias("d_m"),
-        )
-        .localCheckpoint()
-    )
-    tot = monthly.agg(
-        F.sum("s_m").cast("bigint").alias("s_all"),
-        F.sum("d_m").cast("bigint").alias("d_all"),
-    )
-    idx = monthly.crossJoin(F.broadcast(tot)).select(
-        "cal_month",
-        F.round(
-            F.lit(1_000_000.0)
-            * (F.col("s_m") * F.col("d_all"))
-            / (F.col("d_m") * F.col("s_all"))
-        )
-        .cast("bigint")
-        .alias("index_micro"),
-    )
+    # feeds the index build AND the residual join
+    daily = _daily_order_cents(spark, sf_dir).localCheckpoint()
+    idx = _month_shares(daily).select("cal_month", _index_micro())
     resid = (
         daily.join(F.broadcast(idx), F.month("day") == idx.cal_month)
         .select(

@@ -40,11 +40,19 @@ from ..operators.skew import salted_join_hotkeys as _salted_join_hotkeys
 from ..operators.topk import top_k_per_group, top_k_pivot
 from ..pipelines.cleaner import clean_jobs as _clean_jobs
 from ..pipelines.cleaner import exchange_rates_dim as _rates_dim
+from ..pipelines.populator import skill_counts as _skill_counts
 from ..pipelines.populator import skills_dim as _skills_dim
 from ..pipelines.populator import top_skills as _top_skills
 from ..sources import scrape as _SC
 from ..sources.readers import read_scraped_csv as _read_scraped_csv
-from .common import CSV_FIXTURE_GLOB, RW_BIN_US, RW_HALF_US, bloom_bit_col
+from .common import (
+    CSV_FIXTURE_GLOB,
+    RW_BIN_US,
+    RW_HALF_US,
+    bloom_bit_col,
+    error_window_counts,
+    error_window_sides,
+)
 from .registry import REGISTRY, register  # noqa: F401  (REGISTRY: re-exported)
 
 
@@ -384,17 +392,12 @@ SKILLS_VOCAB = (
 
 
 def _doc_skill_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """explode(tokenize) -> semi-join skills -> groupBy count: the populator
-    pipeline (populator.py:39-46) as one declarative plan. The skills dim is
-    a broadcast literal; the count is a two-phase hash agg."""
+    """(lang, token, cnt): the publish stage's own skill count
+    (``pipelines.populator.skill_counts``) over the documents, grouped by
+    language — explode(tokenize) -> vocabulary filter -> two-phase hash agg."""
     docs = table(spark, sf_dir, "documents")
-    skills = literal_dim(spark, [(s,) for s in SKILLS_VOCAB], "token string")
-    toks = docs.select("lang", F.explode(tokenize(F.col("text"))).alias("token"))
-    return (
-        toks.join(F.broadcast(skills), "token", "left_semi")
-        .groupBy("lang", "token")
-        .agg(F.count("*").alias("cnt"))
-    )
+    counts = _skill_counts(docs, _skills_dim(spark, SKILLS_VOCAB), "lang", "text")
+    return counts.withColumnRenamed("job", "lang")
 
 
 _SKILLS_IN = ", ".join(f"'{s}'" for s in SKILLS_VOCAB)
@@ -422,8 +425,8 @@ _TOP_SKILLS_ORACLE = f"""
     "top_skills_by_lang",
     oracle=_TOP_SKILLS_ORACLE,
     doc="FLAGSHIP — the populator query end-to-end (populator.py:39-46): "
-        "tokenize -> semi-join skills vocab -> grouped count -> "
-        "deterministic top-10 per group. Touches explode/semi-join/agg/"
+        "tokenize -> filter by the skills vocab -> grouped count -> "
+        "deterministic top-10 per group. Touches explode/filter/agg/"
         "window in one plan.",
 )
 def top_skills_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -851,6 +854,30 @@ def point_lookup_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
+def _order_event_asof(spark: SparkSession, sf_dir: str, prefix: str, **how) -> DataFrame:
+    """Each order with its as-of matched event of the same customer
+    (``how``: _asof_join's direction/tolerance), the event's type and
+    rounded value named ``{prefix}_event_type`` / ``{prefix}_event_value``."""
+    o = table(spark, sf_dir, "orders")
+    joined = _asof_join(
+        o.select("o_orderkey", "o_custkey", "o_orderdate"),
+        _events_unique_ts(spark, sf_dir),
+        key_left="o_custkey",
+        key_right="user_id",
+        left_ts="o_orderdate",
+        right_ts="ts",
+        payload_cols=["event_type", "value"],
+        **how,
+    )
+    return joined.select(
+        "o_orderkey",
+        "o_custkey",
+        "o_orderdate",
+        F.col("event_type").alias(f"{prefix}_event_type"),
+        F.round("value", 2).alias(f"{prefix}_event_value"),
+    )
+
+
 @register(
     "join_asof_order_event",
     oracle="""
@@ -872,23 +899,7 @@ def point_lookup_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         "DuckDB's native ASOF JOIN.",
 )
 def join_asof_order_event(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(spark, sf_dir, "orders")
-    joined = _asof_join(
-        o.select("o_orderkey", "o_custkey", "o_orderdate"),
-        _events_unique_ts(spark, sf_dir),
-        key_left="o_custkey",
-        key_right="user_id",
-        left_ts="o_orderdate",
-        right_ts="ts",
-        payload_cols=["event_type", "value"],
-    )
-    return joined.select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderdate",
-        F.col("event_type").alias("last_event_type"),
-        F.round("value", 2).alias("last_event_value"),
-    )
+    return _order_event_asof(spark, sf_dir, "last")
 
 
 @register(
@@ -1220,24 +1231,7 @@ def _events_unique_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "oracle is DuckDB's native forward ASOF (inequality flipped).",
 )
 def join_asof_forward_event(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(spark, sf_dir, "orders")
-    joined = _asof_join(
-        o.select("o_orderkey", "o_custkey", "o_orderdate"),
-        _events_unique_ts(spark, sf_dir),
-        key_left="o_custkey",
-        key_right="user_id",
-        left_ts="o_orderdate",
-        right_ts="ts",
-        payload_cols=["event_type", "value"],
-        direction="forward",
-    )
-    return joined.select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderdate",
-        F.col("event_type").alias("next_event_type"),
-        F.round("value", 2).alias("next_event_value"),
-    )
+    return _order_event_asof(spark, sf_dir, "next", direction="forward")
 
 
 @register(
@@ -1269,24 +1263,8 @@ def join_asof_forward_event(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(2592000000000 us = 30 days).",
 )
 def join_asof_nearest_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(spark, sf_dir, "orders")
-    joined = _asof_join(
-        o.select("o_orderkey", "o_custkey", "o_orderdate"),
-        _events_unique_ts(spark, sf_dir),
-        key_left="o_custkey",
-        key_right="user_id",
-        left_ts="o_orderdate",
-        right_ts="ts",
-        payload_cols=["event_type", "value"],
-        direction="nearest",
-        tolerance="interval 30 days",
-    )
-    return joined.select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderdate",
-        F.col("event_type").alias("near_event_type"),
-        F.round("value", 2).alias("near_event_value"),
+    return _order_event_asof(
+        spark, sf_dir, "near", direction="nearest", tolerance="interval 30 days"
     )
 
 
@@ -2436,18 +2414,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "microseconds on both engines.",
 )
 def join_range_binned_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", F.unix_micros(F.col("ts").cast("timestamp")).alias("t")
-    )
-    errors = ev.where(F.col("event_type") == "error").select(
-        F.col("event_id").alias("err_id"),
-        "user_id",
-        (F.col("t") - RW_HALF_US).alias("lo"),
-        (F.col("t") + RW_HALF_US).alias("hi"),
-    ).localCheckpoint()  # feeds the bin join AND the final zero-fill join
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_id"), "user_id", "t"
-    )
+    errors, purchases = error_window_sides(spark, sf_dir)
     matches = bin_range_join(
         purchases,
         errors,
@@ -2457,21 +2424,7 @@ def join_range_binned_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         bin_width=RW_BIN_US,
         keys=["user_id"],
     )
-    agg = matches.groupBy("err_id").agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.min("p_id").cast("bigint").alias("mn"),
-    )
-    return (
-        errors.select("err_id", "user_id")
-        .join(agg, "err_id", "left")
-        .select(
-            "err_id",
-            "user_id",
-            F.coalesce(F.col("n"), F.lit(0)).cast("bigint").alias("n_purchases"),
-            F.col("mn").alias("first_purchase_id"),
-        )
-        .orderBy("err_id")
-    )
+    return error_window_counts(errors, matches)
 
 
 # Determinism (the queries module docstring): all joins/aggregates on exact

@@ -34,6 +34,9 @@ from .common import (
     SQL_BANDED_CAND,
     SQL_CORPUS,
     SQL_SIG,
+    error_window_counts,
+    error_window_sides,
+    planted_corpus,
     scratch_dir,
     sql_shingles,
 )
@@ -448,6 +451,40 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 
 
+def _split_col(key: str):
+    """Arrival file 0..2 of a row: its md5(key)-derived split, engine-portable."""
+    return F.pmod(
+        F.conv(F.substring(F.md5(F.col(key).cast("string")), 1, 8), 16, 10)
+        .cast("bigint"),
+        F.lit(3),
+    )
+
+
+def _replay_arrivals(
+    spark: SparkSession, staged: DataFrame, src: str, ckpt: str, handler
+) -> None:
+    """Write each ``_split`` slice (0..2) of ``staged`` as one arrival file
+    under ``src``, then replay them as an AvailableNow file stream, one
+    file per micro-batch, into the foreachBatch ``handler``."""
+    for k in range(3):
+        staged.filter(F.col("_split") == k).drop("_split").coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+    stream = (
+        spark.readStream.schema(staged.drop("_split").schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+    with _stream_state_partitions(spark):
+        q = (
+            stream.writeStream.trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .foreachBatch(handler)
+            .start()
+        )
+        q.awaitTermination()
+
+
 @register(
     "streaming_dedup_state_ingest",
     oracle=f"""
@@ -476,18 +513,7 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
 def streaming_dedup_state_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = (
-        docs.unionByName(
-            docs.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
-        )
-        .unionByName(
-            docs.select(
-                (F.col("doc_id") + 200000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" qq xq zq")).alias("text"),
-            )
-        )
-    )
+    corpus = planted_corpus(spark, sf_dir)
     root = scratch_dir("stream_dedup_ingest")
     src = _os.path.join(root, "src")
     state = _os.path.join(root, "band_state")
@@ -496,16 +522,7 @@ def streaming_dedup_state_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hash-split into 3 arrival files so planted pairs land both within
     # and across micro-batches (base/copy ids differ by 1e5 -> different
     # md5 split keys; ~1/3 of pairs co-arrive).
-    split = F.pmod(
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint"),
-        F.lit(3),
-    )
-    staged = corpus.withColumn("_split", split).localCheckpoint()
-    for k in range(3):
-        staged.filter(F.col("_split") == k).drop("_split").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
+    staged = corpus.withColumn("_split", _split_col("doc_id")).localCheckpoint()
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         # fan_out BEFORE the minhash map: a 1-file micro-batch is one scan
@@ -541,19 +558,7 @@ def streaming_dedup_state_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             state
         )
 
-    stream = (
-        spark.readStream.schema(staged.drop("_split").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    with _stream_state_partitions(spark):
-        q = (
-            stream.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(ingest)
-            .start()
-        )
-        q.awaitTermination()
+    _replay_arrivals(spark, staged, src, ckpt, ingest)
     return spark.read.parquet(result).distinct()
 
 
@@ -621,25 +626,8 @@ def streaming_dedup_state_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_range_join_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
-    ev = table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("t"),
-    )
-    errors = (
-        ev.where(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("err_id"),
-            "user_id",
-            (F.col("t") - RW_HALF_US).alias("lo"),
-            (F.col("t") + RW_HALF_US).alias("hi"),
-        )
-        .localCheckpoint()  # the static dim every micro-batch probes
-    )
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_id"), "user_id", "t"
-    )
+    # errors: the static dim every micro-batch probes
+    errors, purchases = error_window_sides(spark, sf_dir)
     root = scratch_dir("stream_range_join")
     src = _os.path.join(root, "src")
     result = _os.path.join(root, "matches")
@@ -647,10 +635,6 @@ def streaming_range_join_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = purchases.withColumn(
         "_split", F.pmod(F.xxhash64("p_id"), F.lit(3)).cast("int")
     ).localCheckpoint()
-    for k in range(3):
-        staged.filter(F.col("_split") == k).drop("_split").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
 
     def enrich(batch_df: DataFrame, batch_id: int) -> None:
         matches = bin_range_join(
@@ -664,37 +648,11 @@ def streaming_range_join_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select("err_id", "p_id")
         matches.write.mode("append").parquet(result)
 
-    stream = (
-        spark.readStream.schema(staged.drop("_split").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    with _stream_state_partitions(spark):
-        q = (
-            stream.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(enrich)
-            .start()
-        )
-        q.awaitTermination()
+    _replay_arrivals(spark, staged, src, ckpt, enrich)
     # explicit schema: a zero-match run leaves no part files and
     # schema inference would fail on the empty directory
     sink = spark.read.schema("err_id long, p_id long").parquet(result)
-    agg = sink.groupBy("err_id").agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.min("p_id").cast("bigint").alias("mn"),
-    )
-    return (
-        errors.select("err_id", "user_id")
-        .join(agg, "err_id", "left")
-        .select(
-            "err_id",
-            "user_id",
-            F.coalesce(F.col("n"), F.lit(0)).cast("bigint").alias("n_purchases"),
-            F.col("mn").alias("first_purchase_id"),
-        )
-        .orderBy("err_id")
-    )
+    return error_window_counts(errors, sink)
 
 
 # STREAMING ingest into the persistent IVF index.
@@ -731,14 +689,6 @@ def streaming_range_join_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SPLIT_SQL = (
     "('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT % 3"
 )
-
-
-def _split_col():
-    return F.pmod(
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint"),
-        F.lit(3),
-    )
 
 
 @register(
@@ -824,11 +774,7 @@ def streaming_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # 3 deterministic arrival files: md5-split so each micro-batch holds
     # an unpredictable slice of every cell.
-    staged = corpus.withColumn("_split", _split_col()).localCheckpoint()
-    for k in range(3):
-        staged.filter(F.col("_split") == k).drop("_split").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
+    staged = corpus.withColumn("_split", _split_col("vec_id")).localCheckpoint()
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         ivf_index_append(batch_df.sparkSession, idx, batch_df)
@@ -839,19 +785,7 @@ def streaming_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ingest_batch", F.lit(int(batch_id)).cast("bigint")
         ).write.mode("append").parquet(idx + "/arrivals")
 
-    stream = (
-        spark.readStream.schema(staged.drop("_split").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    with _stream_state_partitions(spark):
-        q = (
-            stream.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(ingest)
-            .start()
-        )
-        q.awaitTermination()
+    _replay_arrivals(spark, staged, src, ckpt, ingest)
 
     topk = ivf_index_probe(spark, idx, queries, k=5, nprobe=2, cos_round=4)
     # <=50 rows — materialized so the verdict agg reads the tiny result
@@ -865,7 +799,7 @@ def streaming_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # real count would be 1, the verdict false, and the gate red, even
     # though the split expression would still show 3 distinct values.
     flagged = topk.select(
-        "q_id", "vec_id", "cos", "rank", _split_col().alias("arrival_batch")
+        "q_id", "vec_id", "cos", "rank", _split_col("vec_id").alias("arrival_batch")
     ).localCheckpoint()
     arrivals = spark.read.parquet(idx + "/arrivals")
     verdict = (

@@ -33,6 +33,8 @@ from .common import (
     QC_WEIGHTS,
     gopher_keep,
     gopher_stat_columns,
+    qc_doc_micros,
+    qc_score,
 )
 from .registry import register
 
@@ -765,37 +767,7 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    wdim = literal_dim(spark, QC_WEIGHTS, "bucket int, wgt double")
-    toks = docs.select("doc_id", F.explode(tokenize(F.col("text"))).alias("tok"))
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("tok")), 1, 4), 16, 10).cast("int")
-        % QC_BUCKETS
-    )
-    # One corpus pass: doclen is the per-doc SUM of bucket counts, not a
-    # second explode of the token stream; feats feeds both consumers from
-    # a localCheckpoint (no subplan CSE in Spark).
-    feats = toks.groupBy("doc_id", bucket.alias("bucket")).agg(
-        F.count("*").alias("cnt")
-    ).localCheckpoint()
-    dl = feats.groupBy("doc_id").agg(F.sum("cnt").alias("dl"))
-    z = (
-        feats.join(F.broadcast(wdim), "bucket")
-        .join(dl, "doc_id")
-        .groupBy("doc_id")
-        .agg(
-            F.sum(
-                F.round(F.col("wgt") * F.col("cnt") * 1000000.0 / F.col("dl")).cast(
-                    "bigint"
-                )
-            ).alias("micros")
-        )
-    )
-    scored = z.select(
-        "doc_id",
-        F.round(
-            1.0 / (1.0 + F.exp(-(F.col("micros") / 1000000.0 + F.lit(QC_BIAS)))), 4
-        ).alias("score"),
-    )
+    scored = qc_doc_micros(spark, docs).select("doc_id", qc_score().alias("score"))
     return (
         scored.join(docs.select("doc_id", "lang"), "doc_id")
         .groupBy("lang")
@@ -2147,6 +2119,78 @@ _BPE_ROUNDS = 4
 _BPE_SEP = "\x1f"  # unit separator: never appears in corpus text
 
 
+def _word_types(spark: SparkSession, sf_dir: str, *keys: str) -> DataFrame:
+    """The corpus collapsed to weighted word types: (*keys, word, c) over
+    whitespace-split lowercase document text, empty words dropped."""
+    return (
+        table(spark, sf_dir, "documents")
+        .select(
+            *keys,
+            F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("word"),
+        )
+        .where(F.col("word") != "")
+        .groupBy(*keys, "word")
+        .agg(F.count("*").cast("bigint").alias("c"))
+    )
+
+
+def _bpe_spaced(words: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, s, c): each word as its characters, each followed by _BPE_SEP."""
+    return words.select(
+        *keys, F.regexp_replace("word", "(.)", "$1" + _BPE_SEP).alias("s"), "c"
+    )
+
+
+def _bpe_top_pair(cur: DataFrame) -> DataFrame:
+    """One BPE round's pick: the adjacent symbol pair (a, b) with the
+    largest weighted count ``freq`` over the spaced word frame ``cur``
+    (s, c), ties by (a, b) ascending — one row."""
+    sep = _BPE_SEP
+    l = F.split(F.col("s"), sep)
+    pairs = cur.select(
+        F.explode(
+            F.when(
+                F.size(l) >= 3,
+                F.transform(
+                    F.sequence(F.lit(1), F.size(l) - 2),
+                    lambda i: F.struct(
+                        F.element_at(l, i).alias("a"),
+                        F.element_at(l, i + 1).alias("b"),
+                    ),
+                ),
+            ).otherwise(
+                F.array().cast("array<struct<a:string,b:string>>")
+            )
+        ).alias("pr"),
+        "c",
+    )
+    return (
+        pairs.groupBy(F.col("pr.a").alias("a"), F.col("pr.b").alias("b"))
+        .agg(F.sum("c").cast("bigint").alias("freq"))
+        .orderBy(F.col("freq").desc(), "a", "b")
+        .limit(1)
+    )
+
+
+def _bpe_merge(cur: DataFrame, top: DataFrame, *keys: str) -> DataFrame:
+    """Apply the one-row merge ``top`` (a, b) to every word of ``cur`` as
+    the delimiter-embedded literal replace; materialized per round."""
+    sep = _BPE_SEP
+    return (
+        cur.crossJoin(F.broadcast(top))
+        .select(
+            *keys,
+            F.replace(
+                F.col("s"),
+                F.concat(F.col("a"), F.lit(sep), F.col("b"), F.lit(sep)),
+                F.concat(F.col("a"), F.col("b"), F.lit(sep)),
+            ).alias("s"),
+            "c",
+        )
+        .localCheckpoint()
+    )
+
+
 def _bpe_oracle() -> str:
     sep = "chr(31)"
     parts = [f"""
@@ -2217,64 +2261,18 @@ def _bpe_oracle() -> str:
         "TakeOrdered(1) + broadcast of the 1-row merge rule.",
 )
 def tokenizer_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sep = _BPE_SEP
-    words = (
-        table(spark, sf_dir, "documents")
-        .select(F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("word"))
-        .where(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count("*").cast("bigint").alias("c"))
-        .select(
-            F.regexp_replace("word", "(.)", "$1" + sep).alias("s"), "c"
-        )
-        .localCheckpoint()
-    )
+    words = _bpe_spaced(_word_types(spark, sf_dir)).localCheckpoint()
     out = None
     cur = words
     for r in range(1, _BPE_ROUNDS + 1):
-        l = F.split(F.col("s"), sep)
-        pairs = cur.select(
-            F.explode(
-                F.when(
-                    F.size(l) >= 3,
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(l) - 2),
-                        lambda i: F.struct(
-                            F.element_at(l, i).alias("a"),
-                            F.element_at(l, i + 1).alias("b"),
-                        ),
-                    ),
-                ).otherwise(
-                    F.array().cast("array<struct<a:string,b:string>>")
-                )
-            ).alias("pr"),
-            "c",
-        )
-        top = (
-            pairs.groupBy(F.col("pr.a").alias("a"), F.col("pr.b").alias("b"))
-            .agg(F.sum("c").cast("bigint").alias("freq"))
-            .orderBy(F.col("freq").desc(), "a", "b")
-            .limit(1)
-            .localCheckpoint()
-        )
+        top = _bpe_top_pair(cur).localCheckpoint()
         row = top.select(
             F.lit(r).cast("bigint").alias("round"),
             F.concat_ws(" ", "a", "b").alias("pair"),
             "freq",
         )
         out = row if out is None else out.unionByName(row)
-        cur = (
-            cur.crossJoin(F.broadcast(top))
-            .select(
-                F.replace(
-                    F.col("s"),
-                    F.concat(F.col("a"), F.lit(sep), F.col("b"), F.lit(sep)),
-                    F.concat(F.col("a"), F.col("b"), F.lit(sep)),
-                ).alias("s"),
-                "c",
-            )
-            .localCheckpoint()
-        )
+        cur = _bpe_merge(cur, top)
     return out.orderBy("round")
 
 
@@ -2510,14 +2508,8 @@ def _bpe_encode_oracle() -> str:
 )
 def tokenizer_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     sep = _BPE_SEP
-    raw = (
-        table(spark, sf_dir, "documents")
-        .select(F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("word"))
-        .where(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count("*").cast("bigint").alias("c"))
-        .localCheckpoint()  # feeds the merge loop AND the corpus mass
-    )
+    # feeds the merge loop AND the corpus mass
+    raw = _word_types(spark, sf_dir).localCheckpoint()
     corpus = raw.groupBy().agg(
         F.sum(F.length("word") * F.col("c")).cast("bigint").alias("chars_raw"),
         F.sum("c").cast("bigint").alias("n_words"),
@@ -2526,46 +2518,9 @@ def tokenizer_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-consumer one-projection derivative — the merge loop re-
     # checkpoints every round anyway, so a second materialization of the
     # full word-type frame buys nothing.
-    cur = raw.select(
-        F.regexp_replace("word", "(.)", "$1" + sep).alias("s"), "c"
-    )
+    cur = _bpe_spaced(raw)
     for _ in range(_BPE_ROUNDS):
-        l = F.split(F.col("s"), sep)
-        pairs = cur.select(
-            F.explode(
-                F.when(
-                    F.size(l) >= 3,
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(l) - 2),
-                        lambda i: F.struct(
-                            F.element_at(l, i).alias("a"),
-                            F.element_at(l, i + 1).alias("b"),
-                        ),
-                    ),
-                ).otherwise(
-                    F.array().cast("array<struct<a:string,b:string>>")
-                )
-            ).alias("pr"),
-            "c",
-        )
-        top = (
-            pairs.groupBy(F.col("pr.a").alias("a"), F.col("pr.b").alias("b"))
-            .agg(F.sum("c").cast("bigint").alias("freq"))
-            .orderBy(F.col("freq").desc(), "a", "b")
-            .limit(1)
-        )
-        cur = (
-            cur.crossJoin(F.broadcast(top))
-            .select(
-                F.replace(
-                    F.col("s"),
-                    F.concat(F.col("a"), F.lit(sep), F.col("b"), F.lit(sep)),
-                    F.concat(F.col("a"), F.col("b"), F.lit(sep)),
-                ).alias("s"),
-                "c",
-            )
-            .localCheckpoint()
-        )
+        cur = _bpe_merge(cur, _bpe_top_pair(cur))
     tf = (
         cur.select(F.explode(F.split("s", sep)).alias("token"), "c")
         .where(F.col("token") != "")
@@ -2672,61 +2627,9 @@ def _fertility_oracle() -> str:
 )
 def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     sep = _BPE_SEP
-    cur = (
-        table(spark, sf_dir, "documents")
-        .select(
-            "lang",
-            F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("word"),
-        )
-        .where(F.col("word") != "")
-        .groupBy("lang", "word")
-        .agg(F.count("*").cast("bigint").alias("c"))
-        .select(
-            "lang",
-            F.regexp_replace("word", "(.)", "$1" + sep).alias("s"),
-            "c",
-        )
-        .localCheckpoint()
-    )
+    cur = _bpe_spaced(_word_types(spark, sf_dir, "lang"), "lang").localCheckpoint()
     for _ in range(_BPE_ROUNDS):
-        l = F.split(F.col("s"), sep)
-        pairs = cur.select(
-            F.explode(
-                F.when(
-                    F.size(l) >= 3,
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(l) - 2),
-                        lambda i: F.struct(
-                            F.element_at(l, i).alias("a"),
-                            F.element_at(l, i + 1).alias("b"),
-                        ),
-                    ),
-                ).otherwise(
-                    F.array().cast("array<struct<a:string,b:string>>")
-                )
-            ).alias("pr"),
-            "c",
-        )
-        top = (
-            pairs.groupBy(F.col("pr.a").alias("a"), F.col("pr.b").alias("b"))
-            .agg(F.sum("c").cast("bigint").alias("freq"))
-            .orderBy(F.col("freq").desc(), "a", "b")
-            .limit(1)
-            .select("a", "b")
-        )
-        cur = (
-            cur.crossJoin(F.broadcast(top))
-            .select(
-                "lang",
-                F.replace(
-                    F.col("s"),
-                    F.concat(F.col("a"), F.lit(sep), F.col("b"), F.lit(sep)),
-                    F.concat(F.col("a"), F.col("b"), F.lit(sep)),
-                ).alias("s"),
-                "c",
-            )
-            .localCheckpoint()
-        )
+        cur = _bpe_merge(cur, _bpe_top_pair(cur).select("a", "b"), "lang")
     ntok = F.length("s") - F.length(F.replace(F.col("s"), F.lit(sep), F.lit("")))
     return (
         cur.groupBy("lang")

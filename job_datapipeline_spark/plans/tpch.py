@@ -162,12 +162,14 @@ def tpch_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("_sq") > 250)
         .select("l_orderkey")
     )
+    # the keep-list is ~0.1% of orders, so it scales with the input: no
+    # broadcast hint, the planner picks each semi-join
     o = table(spark, sf_dir, "orders").join(
-        F.broadcast(big), F.col("o_orderkey") == big.l_orderkey, "left_semi"
+        big, F.col("o_orderkey") == big.l_orderkey, "left_semi"
     )
     c = table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     li_big = li.join(
-        F.broadcast(big.select(F.col("l_orderkey").alias("_bk"))),
+        big.select(F.col("l_orderkey").alias("_bk")),
         F.col("l_orderkey") == F.col("_bk"),
         "left_semi",
     )

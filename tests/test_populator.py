@@ -6,10 +6,13 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
+
 from conftest import SF_SMOKE, jobs_in_group
 from job_datapipeline_spark.catalog import table
 from job_datapipeline_spark.pipelines.populator import skills_dim, top_skills
-from job_datapipeline_spark.plans.queries import SKILLS_VOCAB
+from job_datapipeline_spark.plans.queries import REGISTRY, SKILLS_VOCAB
+from job_datapipeline_spark.testing import compare, duck_con
 
 
 def _job_id(job: str) -> str:
@@ -54,3 +57,18 @@ def test_top_skills_job_counts(spark):
 
     assert jobs_in_group(spark, "top_skills_build", build) == []
     assert len(jobs_in_group(spark, "top_skills_eval", lambda: built["pivoted"].collect())) == 4
+
+
+@pytest.mark.parametrize("name", ["top_skills_by_lang", "top_skills_pivot"])
+def test_top_skills_queries_broadcast_nothing(spark, name):
+    """The registry's top-skills queries count through the publish stage's
+    own ``skill_counts``: the executed plan (subqueries included) holds no
+    broadcast, which on the string token key would pin a whole Tungsten
+    page per evaluation, and the result still matches the oracle."""
+    q = REGISTRY[name]
+    df = q.fn(spark, SF_SMOKE)
+    got = df.toPandas()
+    plan = spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    assert "isFinalPlan=true" in plan
+    assert "BroadcastExchange" not in plan and "BroadcastHashJoin" not in plan, plan
+    assert not compare(got, duck_con(SF_SMOKE).execute(q.oracle).df())

@@ -82,3 +82,44 @@ def test_no_private_imports_between_plan_modules():
                     if a.name.startswith("_")
                 ]
     assert private == []
+
+
+def _public_names(path: str) -> set[str]:
+    with open(path) as fh:
+        tree = ast.parse(fh.read())
+    names = set()
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, ast.Assign):
+            names.update(t.id for t in node.targets if isinstance(t, ast.Name))
+    return {n for n in names if not n.startswith("_")}
+
+
+def test_no_plan_module_redefines_a_shared_helper():
+    """Plan code calls the ``operators/`` and ``functions/`` helpers rather
+    than redefining them: no plan module defines, at any depth, by ``def``
+    or by assigning a lambda, a name those packages export."""
+    pkg = os.path.dirname(_PLANS)
+    exported = set()
+    for sub in ("operators", "functions"):
+        for path in glob.glob(os.path.join(pkg, sub, "*.py")):
+            exported |= _public_names(path)
+    assert {"dot", "l2sq_micro", "pq_subspace_struct"} <= exported
+    redefined = []
+    for path in sorted(glob.glob(os.path.join(_PLANS, "*.py"))):
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defined = [node.name]
+            elif isinstance(node, ast.Assign) and isinstance(node.value, ast.Lambda):
+                defined = [t.id for t in node.targets if isinstance(t, ast.Name)]
+            else:
+                continue
+            redefined += [
+                f"{os.path.basename(path)}:{node.lineno} {name}"
+                for name in defined
+                if name in exported
+            ]
+    assert redefined == []
