@@ -211,8 +211,6 @@ def multimodal_blob_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "write -> partition-discover -> pruned-read round trip.",
 )
 def sink_roundtrip_newest_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..sources.readers import read_newest_partition
     from ..sources.sinks import write_partitioned_parquet
 
@@ -301,7 +299,6 @@ def _bmp_golden_values_sql() -> str:
 )
 def multimodal_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from ..sources.multimodal import (
         decode_image_features,
@@ -391,7 +388,6 @@ def _wav_golden_values_sql() -> str:
 )
 def multimodal_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from ..sources.multimodal import decode_audio_features, read_binary_dir
 
@@ -431,8 +427,6 @@ def multimodal_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "longs, doubles, timestamps, and strings.",
 )
 def sink_roundtrip_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..sources.sinks import write_csv
 
     orders = table(spark, sf_dir, "orders")
@@ -528,8 +522,6 @@ def csv_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rows.",
 )
 def parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     base = scratch_dir("schema_evo") + "/customers"
     c = table(spark, sf_dir, "customer")
     v1 = c.filter(F.col("c_custkey") % 2 == 0).select("c_custkey", "c_mktsegment")
@@ -667,7 +659,7 @@ _PYDS_N = 120
 
 
 def _pyds_expected_rows():
-    from ..sources.python_datasource import _LOCS, _TITLES, _row
+    from ..sources.python_datasource import _row
 
     agg: dict = {}
     for i in range(_PYDS_N):
@@ -742,16 +734,15 @@ def python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fanning-out lateral — each document yields one row per "
         "\\bs\\w+ regex match with its 1-based match index. The class "
         "is defined inside the query so cloudpickle ships it BY VALUE "
-        "(no worker package import needed), and the temp view gets a "
-        "unique name per call (no shared-session collision). Policy "
+        "(no worker package import needed), and it is applied with "
+        "DataFrame.lateralJoin on the UDTF object, so a call registers "
+        "no function and no temp view in the session. Policy "
         "note: UDTFs are row-at-a-time Python — like the uuid5 UDF this "
         "is a documented capability demo; the native form of this exact "
         "computation is posexplode over regexp_extract_all "
         "(text_first_occurrence).",
 )
 def python_udtf_regex_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid as _uuid
-
     from pyspark.sql.functions import udtf as _udtf
 
     @_udtf(returnType="match_idx bigint, tok string")
@@ -764,14 +755,8 @@ def python_udtf_regex_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             ):
                 yield i, m.group(0)
 
-    tag = _uuid.uuid4().hex[:12]
-    spark.udtf.register(f"_spans_{tag}", _Spans)
     docs = table(spark, sf_dir, "documents").filter(F.trim(F.col("text")) != "")
-    docs.createOrReplaceTempView(f"_docs_{tag}")
-    return spark.sql(
-        f"SELECT d.doc_id, s.match_idx, s.tok "
-        f"FROM _docs_{tag} d, LATERAL _spans_{tag}(d.text) s"
-    )
+    return docs.lateralJoin(_Spans(F.col("text").outer())).select("doc_id", "match_idx", "tok")
 
 
 @register(
@@ -800,7 +785,6 @@ def python_udtf_regex_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def python_datasource_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os as _os
-    import tempfile
 
     from ..deploy import ensure_shipped
     from ..sources.python_datasource import JsonlDirDataSource
@@ -897,7 +881,6 @@ def _bmp_golden_resize_rows(out_w: int = 8, out_h: int = 8):
 )
 def multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from ..sources.multimodal import read_binary_dir, resize_image_features
 

@@ -78,7 +78,6 @@ def _stream_events_src(spark: SparkSession, sf_dir: str, planted_dups: bool = Fa
     real incremental pipeline reads a source that already exists — the
     streaming queries should time the STREAM RUN, not a fixture rewrite."""
     import os
-    import tempfile
 
     key = (id(spark), sf_dir, planted_dups)
     cached = _STREAM_SRC_CACHE.get(key)
@@ -140,7 +139,6 @@ def _stream_events_src(spark: SparkSession, sf_dir: str, planted_dups: bool = Fa
         "O(active users); closed keys are removed from the store.",
 )
 def streaming_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
     import uuid
 
     from ..streaming.pipelines import available_now_to_memory, read_events_stream
@@ -179,7 +177,6 @@ def streaming_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame
         "listing.py:188) with BOUNDED state.",
 )
 def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
     import uuid
 
     from ..streaming.pipelines import (
@@ -225,7 +222,6 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "interval join in batch SQL.",
 )
 def streaming_view_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
     import uuid
 
     from ..streaming.pipelines import (
@@ -263,7 +259,6 @@ def streaming_view_click_attribution(spark: SparkSession, sf_dir: str) -> DataFr
         "windows evict instead of accumulating forever.",
 )
 def streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
     import uuid
 
     from ..streaming.pipelines import (
@@ -301,8 +296,6 @@ def streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "date-stamped S3 objects, with Spark owning the bookkeeping.",
 )
 def streaming_incremental_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..streaming.pipelines import available_now_to_parquet, read_events_stream
 
     src = _stream_events_src(spark, sf_dir)
@@ -339,7 +332,6 @@ def streaming_incremental_parquet(spark: SparkSession, sf_dir: str) -> DataFrame
         "in the streaming surface next to stream-stream and stateful.",
 )
 def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
     import uuid
 
     from ..streaming.pipelines import (
@@ -392,8 +384,6 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         "i.e. replay is harmless.",
 )
 def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..streaming.pipelines import foreachbatch_partition_upsert
 
     ev = table(spark, sf_dir, "events").withColumn(

@@ -20,6 +20,14 @@ scale from the start:
   one ``lstat``. Cluster executors would not have the class on their
   classpath, and HDFS/S3 never shell out, so other masters keep the stock
   classes.
+- ``spark.sql.codegen.cache.maxEntries`` is 8192, not Spark's 100. Spark
+  keeps the classes it generates and compiles (whole-stage stages,
+  projections, predicates) in one JVM-wide cache. One ``sql_short`` pass
+  alone needs 124 of them and the whole registry 5.5 k, so at the default
+  every pass recompiled most of them in Janino at 6-10 ms each. The cap,
+  not the working set, bounds the cache's memory (see "Generated-code
+  cache" in ``docs/SCALING.md``). It is a static conf: a JVM started
+  elsewhere (the external driver's vanilla session) keeps Spark's default.
 """
 
 from __future__ import annotations
@@ -136,6 +144,14 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Static (JVM-wide, read once). Spark's default keeps 100 compiled
+        # classes. Working sets measured at local[4]: a sql_short pass 124
+        # classes (94-96 recompiled on every later pass at the default),
+        # the largest single query 130, all 363 registry queries 5.5 k at
+        # sf0.01 (a second registry pass recompiled 7,954). 8192 holds the
+        # whole registry with headroom; a full cache costs ~31 KB of heap
+        # and ~8 KB of metaspace per class (docs/SCALING.md).
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
     )
     conf = local_fs_confs(master)
     for k, v in (extra_conf or {}).items():

@@ -123,3 +123,39 @@ def test_no_plan_module_redefines_a_shared_helper():
                 if name in exported
             ]
     assert redefined == []
+
+
+def _imports_with_scope(tree: ast.AST):
+    """Each import statement with the function (or module) whose names it
+    binds."""
+
+    def walk(node, scope):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.Import, ast.ImportFrom)):
+                yield child, scope
+            inner = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda))
+            yield from walk(child, child if inner else scope)
+
+    yield from walk(tree, tree)
+
+
+def test_no_plan_module_imports_a_name_it_never_reads():
+    """An import binds a name in its function (or the module); some code in
+    that scope must read it. A re-export says so with ``# noqa: F401``."""
+    unread = []
+    for path in sorted(glob.glob(os.path.join(_PLANS, "*.py"))):
+        with open(path) as fh:
+            src = fh.read()
+        lines = src.splitlines()
+        for node, scope in _imports_with_scope(ast.parse(src)):
+            if getattr(node, "module", None) == "__future__" or "noqa: F401" in lines[node.lineno - 1]:
+                continue
+            read = {
+                n.id for n in ast.walk(scope) if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+            }
+            unread += [
+                f"{os.path.basename(path)}:{node.lineno} {a.asname or a.name}"
+                for a in node.names
+                if (a.asname or a.name).split(".")[0] not in read
+            ]
+    assert unread == []

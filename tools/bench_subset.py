@@ -1,6 +1,10 @@
 """Time a subset of registry queries (min-of-N noop-sink runs) and
 optionally dump .explain("formatted") per query.
 
+Each timed run also reports the Janino compilations it caused (the
+JVM-wide `CodegenMetrics` count delta), so a query that misses Spark's
+generated-code cache on a repeated run shows a non-zero count.
+
 Usage: python tools/bench_subset.py [--sf DIR] [--runs N] [--explain DIR] q1 q2 ...
 
 Each dump has its session-counter ids (`#123`, `plan_id=123`,
@@ -74,6 +78,7 @@ def main() -> None:
     spark = get_spark("bench-subset")
     warm_up(spark, args.sf_dir)
 
+    compilations = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     out: dict[str, float] = {}
     for name in args.names:
         q = REGISTRY[name]
@@ -84,14 +89,16 @@ def main() -> None:
                 q.fn(spark, args.sf_dir).explain("formatted")
             with open(os.path.join(args.explain_dir, f"{name}.txt"), "w") as fh:
                 fh.write(renumber_ids(buf.getvalue()))
-        samples = []
+        samples, compiled = [], []
         for _ in range(args.runs):
             spark.sparkContext.setJobDescription(f"bench-subset:{name}")
+            c0 = compilations.getCount()
             t0 = time.time()
             q.fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
             samples.append(round(time.time() - t0, 3))
+            compiled.append(compilations.getCount() - c0)
         out[name] = min(samples)
-        print(f"{min(samples):8.3f}  {name}  (runs: {samples})", flush=True)
+        print(f"{min(samples):8.3f}  {name}  (runs: {samples}, compiled: {compiled})", flush=True)
     print(json.dumps(out))
 
 
